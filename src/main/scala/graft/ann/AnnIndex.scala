@@ -9,7 +9,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.types.{Algorithm, GraftException, NonLinearConfig, PredicateCondition, StoreSchema}
 import graft.engine.GraftEngine
-import graft.functions.{Predicates, Similarity}
+import graft.functions.Predicates
 
 /**
  * Distributed ANN index: one HNSW graph or KD-tree per partition, built with
@@ -60,14 +60,6 @@ final class KdShard(val tree: KdTree) extends AnnShard {
 @SerialVersionUID(1L)
 final class PatchedShard(val base: AnnShard, extraIds: Array[Long],
     extraVecs: Array[Array[Float]], metric: Algorithm) extends AnnShard {
-  private def closeness(q: Array[Float], v: Array[Float]): Double = {
-    val jvm = Similarity.jvm
-    metric match {
-      case Algorithm.EuclideanDistance | Algorithm.KDTree => -jvm.sqEuclidean(q, v)
-      case Algorithm.DotProductSimilarity => jvm.dot(q, v)
-      case _ => jvm.cosine(q, v)
-    }
-  }
   def extraRows: Int = extraIds.length
   def extraEntries: Iterator[(Long, Array[Float])] =
     extraIds.iterator.zip(extraVecs.iterator)
@@ -78,7 +70,7 @@ final class PatchedShard(val base: AnnShard, extraIds: Array[Long],
     var i = 0
     while (i < extraIds.length) {
       if (accept == null || accept(extraIds(i)))
-        fromExtra += ((extraIds(i), closeness(q, extraVecs(i))))
+        fromExtra += ((extraIds(i), RoutedAnnIndex.closenessOf(metric, q, extraVecs(i))))
       i += 1
     }
     (fromBase ++ fromExtra)
@@ -131,28 +123,7 @@ final class AnnIndex(
       case c => throw GraftException(
         s"scanSearch is an HNSW-arm dispatch; unexpected index config $c")
     }
-    val kk = k
-    val sc = shards.sparkContext
-    val bq = sc.broadcast(q)
-    val bf = sc.broadcast(filter)
-    val ord = Ordering.by[(Double, Long), (Double, Long)] {
-      case (c, id) => (-c, id) // head of this ordering = worst kept entry
-    }
-    val local = shards.mapPartitions { it =>
-      val f = bf.value
-      val accept: Long => Boolean = if (f == null) null else f.accept _
-      val q2 = bq.value
-      val h = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord)
-      it.foreach(shard =>
-        RoutedAnnIndex.acceptedRowsOf(shard, accept).foreach { case (id, v) =>
-          val e = (RoutedAnnIndex.closenessOf(metric, q2, v), id)
-          if (h.size < kk) h.enqueue(e)
-          else if (ord.lt(e, h.head)) { h.dequeue(); h.enqueue(e) }
-        })
-      h.iterator.map { case (c, id) => (id, c) }
-    }.collect()
-    bq.destroy(); bf.destroy()
-    local.sortBy { case (id, c) => (-c, id) }.take(k).toSeq
+    RoutedAnnIndex.sliceScan(shards, metric, q, k, Array.emptyLongArray, filter)
   }
 
   /** Merged top-k across shards (driver-side bounded merge —

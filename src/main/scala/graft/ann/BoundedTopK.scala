@@ -52,11 +52,17 @@ object BoundedTopK {
   @inline private def better(s1: Double, c1: Long, s2: Double, c2: Long): Boolean =
     s1 > s2 || (s1 == s2 && c1 < c2)
 
-  /** Bounded per-qid buffer: a binary heap over parallel primitive arrays
-    * whose ROOT is the worst kept element, so an offer is O(1) reject or
-    * O(log k) replace. */
-  private final class Buf(k: Int) {
-    private[BoundedTopK] var n = 0
+  /** Bounded (score DESC, id ASC) top-k over parallel primitive arrays:
+    * a binary heap whose ROOT is the worst kept element, so an offer is
+    * an O(1) reject or an O(log k) replace. An id offered again keeps its
+    * best score: the kept set is the top k DISTINCT ids, so a candidate
+    * table that repeats an id (boundary replicas, a user view with
+    * duplicate ids) ranks it once. The one k-heap every exact top-k
+    * shares — the fold's per-qid buffers, the single-query slice scans
+    * ([[AnnIndex.scanSearch]], [[RoutedAnnIndex.scanSearch]]), the
+    * routed join's slice-scan arm and calibration ground truth. */
+  private[ann] final class Heap(k: Int) {
+    private var n = 0
     private val ids = new Array[Long](k)
     private val ss = new Array[Double](k)
     @inline private def worse(i: Int, j: Int): Boolean =
@@ -65,52 +71,65 @@ object BoundedTopK {
       val ti = ids(i); ids(i) = ids(j); ids(j) = ti
       val ts = ss(i); ss(i) = ss(j); ss(j) = ts
     }
-    def offer(cid: Long, s: Double): Unit = {
-      if (n < ids.length) {
-        ids(n) = cid; ss(n) = s; n += 1
+    def offer(id: Long, s: Double): Unit = {
+      // full and no better than the worst kept: a kept copy of this id
+      // already scores at least as well, so nothing can change
+      if (n == ids.length && (n == 0 || !better(s, id, ss(0), ids(0)))) return
+      var j = 0
+      while (j < n && ids(j) != id) j += 1
+      if (j < n) {
+        if (s > ss(j)) { ss(j) = s; siftDown(j) }
+      } else if (n < ids.length) {
+        ids(n) = id; ss(n) = s; n += 1
         var i = n - 1
         while (i > 0) {
           val p = (i - 1) / 2
           if (worse(i, p)) { swap(i, p); i = p } else i = 0
         }
-      } else if (better(s, cid, ss(0), ids(0))) {
-        ids(0) = cid; ss(0) = s
-        var i = 0
-        var done = false
-        while (!done) {
-          val l = 2 * i + 1; val r = l + 1; var m = i
-          if (l < n && worse(l, m)) m = l
-          if (r < n && worse(r, m)) m = r
-          if (m == i) done = true else { swap(i, m); i = m }
-        }
+      } else { ids(0) = id; ss(0) = s; siftDown(0) }
+    }
+    /** Restore the heap below `from` after its entry got better. */
+    private def siftDown(from: Int): Unit = {
+      var i = from
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1; val r = l + 1; var m = i
+        if (l < n && worse(l, m)) m = l
+        if (r < n && worse(r, m)) m = r
+        if (m == i) done = true else { swap(i, m); i = m }
       }
     }
-    /** Kept entries best-first: (score DESC, cid ASC). */
-    def sortedIds: Array[Long] = order.map(ids)
-    def sortedScores: Array[Double] = order.map(ss)
-    private def order: Array[Int] = (0 until n).toArray
+    /** Kept (id, score) pairs best-first: (score DESC, id ASC). */
+    def best: Array[(Long, Double)] = (0 until n).toArray
       .sortWith((a, b) => better(ss(a), ids(a), ss(b), ids(b)))
+      .map(i => (ids(i), ss(i)))
   }
 
-  /** Merge two best-first partials, keep k — associative + commutative
-    * under the total order, so flush/combine composition is exact. */
+  /** Merge two best-first partials, keep k distinct ids — associative +
+    * commutative under the total order (an id in both keeps its first,
+    * i.e. best, occurrence), so flush/combine composition is exact. */
   private def merge(a: (Array[Long], Array[Double]),
       b: (Array[Long], Array[Double]), k: Int): (Array[Long], Array[Double]) = {
-    val n = math.min(k, a._1.length + b._1.length)
-    val ids = new Array[Long](n); val ss = new Array[Double](n)
+    val ids = new Array[Long](math.min(k, a._1.length + b._1.length))
+    val ss = new Array[Double](ids.length)
+    val taken = new LongIntMap(ids.length)
     var i = 0; var j = 0; var o = 0
-    while (o < n) {
+    while (o < ids.length && (i < a._1.length || j < b._1.length)) {
       val takeA = j >= b._1.length ||
         (i < a._1.length && better(a._2(i), a._1(i), b._2(j), b._1(j)))
-      if (takeA) { ids(o) = a._1(i); ss(o) = a._2(i); i += 1 }
-      else { ids(o) = b._1(j); ss(o) = b._2(j); j += 1 }
-      o += 1
+      val (id, sc) =
+        if (takeA) { i += 1; (a._1(i - 1), a._2(i - 1)) }
+        else { j += 1; (b._1(j - 1), b._2(j - 1)) }
+      if (!taken.contains(id)) {
+        taken.put(id, o); ids(o) = id; ss(o) = sc; o += 1
+      }
     }
-    (ids, ss)
+    (java.util.Arrays.copyOf(ids, o), java.util.Arrays.copyOf(ss, o))
   }
 
   /** Per-qid top-k of `scored` by (`scoreCol` DESC, `cidCol` ASC) →
-    * (qid, cid, score, rank), ranks 1-based. Input rows with a NULL in
+    * (qid, cid, score, rank), ranks 1-based; a (qid, cid) pair that
+    * repeats ranks once, at its best score. Input rows with a NULL in
     * any of the three columns are ignored (a window would sort NULLs
     * last and the ≤ k filter would normally drop them anyway). */
   def topK(scored: DataFrame, qidCol: String, cidCol: String,
@@ -126,13 +145,13 @@ object BoundedTopK {
       .fold(FlushEntries.toLong)(_.longValue())
     val partials = in.queryExecution.toRdd.mapPartitions { rows =>
       // InternalRow primitives only — the reused-row hazard never bites
-      var heaps = new java.util.HashMap[Long, Buf]()
+      var heaps = new java.util.HashMap[Long, Heap]()
       var entries = 0L
       val out = scala.collection.mutable.ArrayBuffer[
         (Long, (Array[Long], Array[Double]))]()
       def flush(): Unit = {
-        heaps.forEach((q, b) => out += ((q, (b.sortedIds, b.sortedScores))))
-        heaps = new java.util.HashMap[Long, Buf]()
+        heaps.forEach((q, b) => out += ((q, b.best.unzip)))
+        heaps = new java.util.HashMap[Long, Heap]()
         entries = 0L
       }
       rows.foreach { r =>
@@ -141,7 +160,7 @@ object BoundedTopK {
           var b = heaps.get(qid)
           if (b == null) {
             if (entries + k > flushAt) flush()
-            b = new Buf(k); heaps.put(qid, b); entries += k
+            b = new Heap(k); heaps.put(qid, b); entries += k
           }
           b.offer(r.getLong(1), r.getDouble(2))
         }

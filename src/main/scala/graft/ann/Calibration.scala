@@ -20,6 +20,24 @@ private[ann] object Calibration {
     (mean, sd / math.sqrt(n.toDouble))
   }
 
+  /** One curve point: per sample query, the fraction of its truth set
+    * that `got` returned (an empty truth set reads 1.0) — as (mean, se). */
+  def recall(truth: Map[Int, Set[Long]], got: Map[Int, Set[Long]]): (Double, Double) =
+    meanSe(truth.toSeq.map { case (qi, ts) =>
+      if (ts.isEmpty) 1.0 else got.getOrElse(qi, Set.empty).count(ts).toDouble / ts.size })
+
+  /** Independent read-only measurement arms, up to 3 at a time from a
+    * small driver pool — run back-to-back they left the executors idle
+    * in each arm's tail (r18). Results come back in input order and each
+    * arm is deterministic, so a curve is byte-identical to a serial loop. */
+  def inParallel[A, B](arms: Seq[A])(measure: A => B): Seq[B] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(3, arms.length)))
+    try arms.map(a => pool.submit(new java.util.concurrent.Callable[B] {
+        def call(): B = measure(a) })).map(_.get())
+    finally pool.shutdown()
+  }
+
   /** The SMALLEST curve point meeting `target` — at the one-sided 95%
     * LCB (mean − 1.645·se) when `conservative`, at the raw mean
     * otherwise. `exhaustive` when uncalibrated or no point qualifies —

@@ -103,48 +103,26 @@ final class IvfIndex(
       .select(col("qid"), col("qv").cast("array<float>").as("qv"))
     // one ranked collect per nProbe point, LOO-filtered (ask k+1, drop
     // the query's own id, keep the top-k prefix)
-    def servedJoin(nProbe: Int): DataFrame = quantizedShortlist match {
-      case Some(sl) => quantizedTopKJoin(qdf, "qid", "qv", k + 1, nProbe, sl)
-      case None => topKJoin(qdf, "qid", "qv", k + 1, nProbe)
-    }
-    def rankedSets(nProbe: Int, exact: Boolean = false): Map[Int, Set[Long]] =
-      Calibration.rankedSets(
-        (if (exact) topKJoin(qdf, "qid", "qv", k + 1, nProbe)
-         else servedJoin(nProbe))
-          .select("qid", "cid", "rank").collect(), k, ownIds)
+    def rankedSets(joined: DataFrame): Map[Int, Set[Long]] =
+      Calibration.rankedSets(joined.select("qid", "cid", "rank").collect(), k, ownIds)
     // ground truth: the EXACT exhaustive join (== brute force for IVF),
     // regardless of which arm the ladder measures
-    val truth = rankedSets(nCells, exact = true)
-    // r18 (guide §2.6, same shape as RoutedAnnIndex.calibrateKs): the
-    // ladder points are independent read-only joins over the cached
-    // cells — run up to 3 concurrently from a driver pool instead of
-    // back-to-back; each point's served set is deterministic and the
-    // curve assembles in ladder order, so the numbers are byte-identical
-    // to the serial loop.
+    val truth = rankedSets(topKJoin(qdf, "qid", "qv", k + 1, nCells))
+    // the ladder points are independent read-only joins over the cached
+    // cells (Calibration.inParallel, as RoutedAnnIndex.calibrateKs)
     val ladder = Calibration.ladder(ladderIn, nCells)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(3, ladder.length)))
-    val curve = try {
-      val futs = ladder.map { p =>
-        p -> pool.submit(new java.util.concurrent.Callable[Map[Int, Set[Long]]] {
-          def call(): Map[Int, Set[Long]] =
-            if (p == nCells && quantizedShortlist.isEmpty) truth
-            else rankedSets(p)
-        })
-      }.toMap
-      ladder.map { p =>
-        val got = futs(p).get()
-        val per = truth.toSeq.map { case (qi, ts) =>
-          if (ts.isEmpty) 1.0
-          else got.getOrElse(qi, Set.empty).count(ts).toDouble / ts.size
-        }
-        val (mean, se) = Calibration.meanSe(per)
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          f"IvfIndex.calibrate: nProbe=$p%d recall@$k%d = $mean%.4f +- " +
-            f"$se%.4f se (${truth.size}%d sample queries)")
-        (p, mean, se)
-      }.toArray
-    } finally pool.shutdown()
+    val served = Calibration.inParallel(ladder)(p => quantizedShortlist match {
+      case Some(sl) => rankedSets(quantizedTopKJoin(qdf, "qid", "qv", k + 1, p, sl))
+      case None =>
+        if (p == nCells) truth else rankedSets(topKJoin(qdf, "qid", "qv", k + 1, p))
+    })
+    val curve = ladder.zip(served).map { case (p, got) =>
+      val (mean, se) = Calibration.recall(truth, got)
+      org.slf4j.LoggerFactory.getLogger(getClass).info(
+        f"IvfIndex.calibrate: nProbe=$p%d recall@$k%d = $mean%.4f +- " +
+          f"$se%.4f se (${truth.size}%d sample queries)")
+      (p, mean, se)
+    }.toArray
     val fp = (if (queries.isDefined) "ext:" else "self:") +
       RoutedAnnIndex.sampleFingerprint(sample.map(_._2))
     new IvfIndex(centroids, cells, metric, curve, k, fp)
@@ -152,44 +130,7 @@ final class IvfIndex(
 
   /** The nProbe nearest cells for a query (driver-side: k centroids). */
   def probeCells(q: Array[Float], nProbe: Int): Seq[Int] =
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, Similarity.jvm.sqEuclidean(q, c)) }
-      .sortBy { case (i, d) => (d, i) }
-      .take(math.max(1, math.min(nProbe, nCells)))
-      .map(_._1)
-
-  /** The np nearest cells per query row as a deterministic expression:
-    * (distance, cell) structs sort by distance then cell index, slice
-    * keeps the np best. Shared by both cell-routed joins so their probe
-    * routing can never diverge. */
-  /** The np nearest cells of a query vector, as array<struct<d, c>>:
-    * every centroid distance comes out of ONE native kernel call
-    * ([[org.apache.spark.sql.graftbridge.CentroidDists]] — the
-    * per-centroid-kernel-call array it replaces blew codegen's method
-    * budget at large nCells and ran interpreted, the assignCell flaw on
-    * the query side), then a k-element struct sort ranks them — tiny,
-    * scalar, and ordered (d asc, c asc) exactly as before. This is the
-    * both-sides-large routing path: at 1M+ query rows the distance work
-    * is the corpus-scale cost, the sort is 256 scalars/row. */
-  private def cellRankExpr(np: Int): Column = {
-    import org.apache.spark.sql.graftbridge.{CentroidDists, ColumnBridge}
-    val dists = ColumnBridge.column(CentroidDists(
-      ColumnBridge.expression(col("qv")), centroids.flatten, centroids.length))
-    slice(array_sort(zip_with(dists,
-      sequence(lit(0), lit(centroids.length - 1)),
-      (d, c) => struct(d.as("d"), c.as("c")))), 1, np)
-  }
-
-  /** qid-deduped queries: duplicate query ids would double-score every
-    * matched corpus row and burn ranks on repeats (a qid names ONE query).
-    * Duplicate qids carrying DIFFERENT vectors are caller error; min(qv)
-    * (lexicographic array order) picks one deterministically, where a
-    * dropDuplicates would keep whichever row a partitioning race surfaced.
-    * Shared by both cell-routed joins. */
-  private def dedupedQueries(queries: DataFrame, qId: String,
-      qVec: String): DataFrame =
-    queries.select(col(qId).as("qid"), col(qVec).as("qv"))
-      .groupBy("qid").agg(min(col("qv")).as("qv"))
+    TopKJoin.nearestCentroids(centroids, q, nProbe)
 
   /** Batch k-NN JOIN through the cells — the both-sides-large path that
     * [[graft.dedup.Dedup.topKJoin]]'s broadcast shape can't take: each
@@ -202,33 +143,13 @@ final class IvfIndex(
     * exhaustive join (the correctness gate); smaller nProbe trades recall
     * for a nProbe/nCells scan fraction (recall pinned in IvfSpec).
     * Returns (qid, cid, sim, rank) ranked by closeness under the index's
-    * metric, ties on cid. */
+    * metric, ties on cid; `sim` is the similarity (the distance, for the
+    * distance metrics). One batch top-k core ([[TopKJoin]]): cells source
+    * × exact scorer, no rescore. */
   def topKJoin(queries: DataFrame, qId: String, qVec: String, k: Int,
-      nProbe: Int): DataFrame = {
-    val np = math.max(1, math.min(nProbe, nCells))
-    val probed = dedupedQueries(queries, qId, qVec)
-      .withColumn("_p", explode(cellRankExpr(np)))
-      .select(col("qid"), col("qv"), col("_p.c").as("cell"))
-    // a corpus row lives in exactly one cell and (qid, cell) probes are
-    // distinct, so no match can appear twice. Ranking goes through the
-    // bounded per-task fold ([[BoundedTopK]]), NEVER a window sort of the
-    // exploded match table — that shape cost 22x wall at 10x queries and
-    // is the measured query-side cliff (ScaleJoin, SCALE.md round 13).
-    val scored = probed.join(cells, "cell")
-      .select(col("qid"), col("id"),
-        Similarity.closeness(metric, col("key"), col("qv")).as("_c"))
-    val top = BoundedTopK.topK(scored, "qid", "id", "_c", k)
-    // similarityValue == closeness for the similarity metrics and its
-    // exact negation for the distance ones (closeness = -distance, the
-    // same kernel) — no winner re-scoring needed
-    val sim = metric match {
-      case Algorithm.CosineSimilarity | Algorithm.DotProductSimilarity |
-           Algorithm.HNSW => col("score")
-      case _ => -col("score")
-    }
-    top.select(col("qid"), col("cid"),
-      round(sim.cast("float").cast("double"), 4).as("sim"), col("rank"))
-  }
+      nProbe: Int): DataFrame =
+    TopKJoin(queries, qId, qVec, k,
+      TopKJoin.Cells(this, nProbe, TopKJoin.Exact(metric)), tail = None, TopKJoin.Sim)
 
   /** Label-filtered hard-negative mining inside probed cells — the
     * both-sides-large arm of [[Negatives.hardNegatives]] (that one
@@ -252,15 +173,15 @@ final class IvfIndex(
       s"index cells carry no '$cLabel' payload column — rebuild the index " +
         "from a corpus frame that includes the label")
     require(k > 0, s"k must be positive, got $k")
-    val np = math.max(1, math.min(nProbe, nCells))
     // qid-dedup with the label carried: same min-vector pick as
-    // dedupedQueries (struct ordering compares qv first), so the two
+    // TopKJoin.queries (struct ordering compares qv first), so the two
     // arms can never select different vectors for a duplicated qid
     val q = queries.select(col(qId).as("qid"), col(qVec).as("qv"),
         col(qLabel).as("ql"))
       .groupBy("qid").agg(min(struct(col("qv"), col("ql"))).as("_p"))
       .select(col("qid"), col("_p.qv").as("qv"), col("_p.ql").as("ql"))
-    val probed = q.withColumn("_p", explode(cellRankExpr(np)))
+    val probed = q
+      .withColumn("_p", explode(TopKJoin.nearestCentroids(centroids, col("qv"), nProbe)))
       .select(col("qid"), col("qv"), col("ql"), col("_p.c").as("cell"))
     val scored = probed.join(cells, "cell")
       .where(col("qid") =!= col("id"))
@@ -298,47 +219,12 @@ final class IvfIndex(
     * tradeoff onto the quantization one. Cosine output contract ==
     * (qid, cid, cos, rank). At cluster scale the code columns live stored
     * beside the cell-partitioned table; here they project off the cached
-    * cells (same values — int8Codes is deterministic). */
+    * cells (same values — int8Codes is deterministic). One batch top-k
+    * core ([[TopKJoin]]): cells source × SQ8 scorer × exact rescore. */
   def quantizedTopKJoin(queries: DataFrame, qId: String, qVec: String,
-      k: Int, nProbe: Int, shortlist: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.Quantize
-    require(k > 0, s"k must be > 0, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val np = math.max(1, math.min(nProbe, nCells))
-    val q0 = dedupedQueries(queries, qId, qVec) // quantized once per query
-    val (qmn, qmx) = Quantize.quantParams(col("qv"))
-    val probed = q0
-      .select(col("qid"), col("qv"), Quantize.int8Codes(col("qv")).as("qcodes"),
-        qmn.as("qmn"), qmx.as("qmx"))
-      .withColumn("_p", explode(cellRankExpr(np)))
-      .select(col("qid"), col("qcodes"), col("qmn"), col("qmx"),
-        col("_p.c").as("cell"))
-    // coarse: ONLY the code columns of the probed cells ride the join —
-    // the float vectors never touch this, the widest stage
-    val (cmn, cmx) = Quantize.quantParams(col("key"))
-    val codes = cells.select(col("cell"), col("id"),
-      Quantize.int8Codes(col("key")).as("ccodes"), cmn.as("cmn"), cmx.as("cmx"))
-    // both rankings go through the bounded fold ([[BoundedTopK]]) — the
-    // coarse stage is the widest table this operator ever builds
-    // (|q|·nProbe·cellRows rows) and must never be window-sorted
-    val coarse = probed.join(codes, "cell")
-      .select(col("qid"), col("id"), Quantize.coarseCosine(
-        col("qcodes"), col("qmn"), col("qmx"),
-        col("ccodes"), col("cmn"), col("cmx")).as("s_coarse"))
-    val short = BoundedTopK.topK(coarse, "qid", "id", "s_coarse", shortlist)
-      .select(col("qid"), col("cid").as("id"))
-    // rescore the shortlist only: float vectors by id (shortlist-bounded),
-    // query vectors by qid (broadcast-sized)
-    val exact = short
-      .join(cells.select(col("id"), col("key")), "id")
-      .join(broadcast(q0), "qid")
-      .select(col("qid"), col("id"),
-        Similarity.cosineSimilarity(col("qv"), col("key")).as("cos"))
-    BoundedTopK.topK(exact, "qid", "id", "cos", k)
-      .select(col("qid"), col("cid"),
-        round(col("score"), 4).as("cos"), col("rank"))
-  }
+      k: Int, nProbe: Int, shortlist: Int): DataFrame =
+    TopKJoin(queries, qId, qVec, k, TopKJoin.Cells(this, nProbe, TopKJoin.Sq8),
+      Some(TopKJoin.Tail(shortlist, vectors)), TopKJoin.Cos)
 
   /** PQ × IVF composition (IVF-ADC, the layout of Jégou 2011 §IV): the
     * product-quantized coarse pass runs over the PROBED CELLS ONLY, so the
@@ -356,37 +242,16 @@ final class IvfIndex(
     * contract == (qid, cid, cos, rank). At cluster scale the code column
     * lives stored beside the cell-partitioned table (encode at ingest);
     * here it projects off the cached cells (same values — encodeExpr is
-    * deterministic). */
+    * deterministic). One batch top-k core ([[TopKJoin]]): cells source ×
+    * ADC scorer × exact rescore. */
   def pqTopKJoin(queries: DataFrame, qId: String, qVec: String,
       k: Int, nProbe: Int, shortlist: Int,
-      cb: PqCodebook): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k > 0, s"k must be > 0, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val np = math.max(1, math.min(nProbe, nCells))
-    val q0 = dedupedQueries(queries, qId, qVec)
-    val probed = q0
-      .select(col("qid"), col("qv"), cb.lutExpr(col("qv")).as("luts"),
-        graft.functions.Similarity.hof.l2Norm(col("qv")).as("qn"))
-      .withColumn("_p", explode(cellRankExpr(np)))
-      .select(col("qid"), col("luts"), col("qn"), col("_p.c").as("cell"))
-    val codes = cells.select(col("cell"), col("id"),
-      cb.encodeExpr(col("key")).as("codes"))
-    // bounded fold for both rankings — see quantizedTopKJoin's note
-    val coarse = probed.join(codes, "cell")
-      .select(col("qid"), col("id"),
-        cb.adcCosine(col("luts"), col("qn"), col("codes")).as("s_coarse"))
-    val short = BoundedTopK.topK(coarse, "qid", "id", "s_coarse", shortlist)
-      .select(col("qid"), col("cid").as("id"))
-    val exact = short
-      .join(cells.select(col("id"), col("key")), "id")
-      .join(broadcast(q0), "qid")
-      .select(col("qid"), col("id"), graft.functions.Similarity
-        .cosineSimilarity(col("qv"), col("key")).as("cos"))
-    BoundedTopK.topK(exact, "qid", "id", "cos", k)
-      .select(col("qid"), col("cid"),
-        round(col("score"), 4).as("cos"), col("rank"))
-  }
+      cb: PqCodebook): DataFrame =
+    TopKJoin(queries, qId, qVec, k, TopKJoin.Cells(this, nProbe, TopKJoin.Adc(cb)),
+      Some(TopKJoin.Tail(shortlist, vectors)), TopKJoin.Cos)
+
+  /** The rescore tail's float vectors, by id. */
+  private def vectors: DataFrame = cells.select(col("id").as("cid"), col("key").as("cv"))
 
   /** Top-n over the probed cells only: `cell IN probes` prunes partitions,
     * then exact scoring + TakeOrderedAndProject. Returns (id, key, sim). */

@@ -174,36 +174,15 @@ final class PqCodebook(
     * re-attached (by id — the ids-only discipline) for the exact cosine
     * rescore. Queries broadcast (the small-queries arm, like
     * [[graft.functions.Quantize.quantizedTopKJoin]]); a both-sides-large
-    * caller routes through [[IvfIndex.topKJoin]] cells first. */
+    * caller routes through [[IvfIndex.pqTopKJoin]] cells first. One batch
+    * top-k core ([[TopKJoin]]): broadcast source × ADC scorer × exact
+    * rescore tail; a repeated qid is one query. */
   def topKJoin(queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, shortlist: Int): DataFrame = {
-    require(k > 0, s"k must be > 0, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val q = queries.select(col(qId).as("qid"), col(qVec).as("qv"))
-    // lut + norm are computed ONCE per query row, before the broadcast —
-    // the asymmetric half of ADC (the broadcast materializes them, so the
-    // scan side never re-derives the table)
-    val qPrepped = q.select(col("qid"), lutExpr(col("qv")).as("luts"),
-      Similarity.hof.l2Norm(col("qv")).as("qn"))
-    // the coarse side carries (cid, codes) ONLY — no float vectors
-    val codes = corpus.select(col(cId).as("cid"),
-      encodeExpr(col(cVec)).as("codes"))
-    // rankings go through the bounded per-task fold ([[BoundedTopK]]):
-    // the coarse table is |q|·|corpus| rows — the widest stage any join
-    // in this family builds — and must never be window-sorted
-    val coarse = broadcast(qPrepped).crossJoin(codes)
-      .select(col("qid"), col("cid"),
-        adcCosine(col("luts"), col("qn"), col("codes")).as("s_coarse"))
-    val short = BoundedTopK.topK(coarse, "qid", "cid", "s_coarse", shortlist)
-      .select("qid", "cid")
-    val exact = short
-      .join(corpus.select(col(cId).as("cid"), col(cVec).as("cv")), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("cid"),
-        Similarity.cosineSimilarity(col("qv"), col("cv")).as("cos"))
-    BoundedTopK.topK(exact, "qid", "cid", "cos", k)
-      .select(col("qid"), col("cid"), round(col("score"), 4).as("cos"), col("rank"))
+    val c = corpus.select(col(cId).as("cid"), col(cVec).as("cv"))
+    TopKJoin(queries, qId, qVec, k, TopKJoin.Broadcast(c, TopKJoin.Adc(this)),
+      Some(TopKJoin.Tail(shortlist, c)), TopKJoin.Cos)
   }
 
   /** Compact serialized form + executor-level dedup: a trained codebook

@@ -153,11 +153,6 @@ final class RoutedAnnIndex(
     recallCurves.sortBy(_._1).headOption.map(_._2)
       .getOrElse(Array.empty[(Int, Double, Double)])
 
-  /** Tombstone-aware accept function composed with an optional caller
-    * filter; null when nothing filters (the no-overhead fast path). */
-  private def acceptOf(filter: IdFilter): Long => Boolean =
-    RoutedAnnIndex.composeAccept(tombstones, filter)
-
   /** Batch k-NN JOIN through the routed shards — the both-sides-large
     * twin of the single-query [[search]] (and the graph-speed sibling of
     * [[IvfIndex.topKJoin]]'s cell scan): each query row is ranked against
@@ -197,108 +192,14 @@ final class RoutedAnnIndex(
     * threshold the scan wins on BOTH axes; broad filters keep the
     * in-graph arm (at corpus scale their slice is too large to score per
     * query batch). Filters with unknown cardinality ride the graph arm
-    * as requested — pass the count you sized the Bloom with. */
+    * as requested — pass the count you sized the Bloom with.
+    *
+    * One batch top-k core ([[TopKJoin]]): routed source, no rescore; a
+    * repeated qid is one query (its min(qv) row). */
   def topKJoin(queries: DataFrame, qId: String, qVec: String, k: Int,
-      probes: Int, filter: IdFilter = null): DataFrame = {
-
-    import org.apache.spark.sql.graftbridge.{CentroidDists, ColumnBridge}
-    val spark = queries.sparkSession
-    // sharp-filter cutover: known accept cardinality below the measured
-    // fraction of LIVE LOGICAL rows → exact slice scan at all shards.
-    // `expected` counts distinct accepted ids, so the denominator must
-    // too: physical storedRows over-counts boundary replicas (divide by
-    // the worst-case factor — conservative, the cutover under-triggers)
-    // and tombstoned rows (subtract; they can never be accepted results)
-    val scanSlice = filter match {
-      case IdFilter.Bloom(_, expected) if expected >= 0L =>
-        val logical = liveLogicalRows
-        val sharp = logical > 0 &&
-          expected <= RoutedAnnIndex.FilteredScanFraction * logical
-        if (sharp) org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"RoutedAnnIndex.topKJoin: filter expects $expected of ~$logical " +
-            s"live rows (< ${RoutedAnnIndex.FilteredScanFraction}) — " +
-            "scanning the accepted slice exactly instead of the graphs")
-        sharp
-      case _ => false
-    }
-    val p = if (scanSlice) numShards
-      else math.max(1, math.min(probes, numShards))
-    val q = queries.select(col(qId).cast("long").as("qid"),
-        col(qVec).cast("array<float>").as("qv"))
-      .groupBy("qid").agg(min(col("qv")).as("qv"))
-    val dists = ColumnBridge.column(CentroidDists(
-      ColumnBridge.expression(col("qv")), centroids.flatten, numShards))
-    val ranked = slice(array_sort(zip_with(dists,
-      sequence(lit(0), lit(numShards - 1)),
-      (d, c) => struct(d.as("d"), c.as("c")))), 1, p)
-    val routed = q.select(explode(ranked).as("_p"), col("qid"), col("qv"))
-      .select(col("_p.c").cast("int").as("_s"), col("qid"), col("qv"))
-    val byShard = routed
-      .rdd.map(r => (r.getInt(0), (r.getLong(1), r.getSeq[Float](2).toArray)))
-      .partitionBy(new RoutedAnnIndex.ShardPartitioner(numShards))
-      .mapPartitions(it => Iterator.single(it.map(_._2).toArray),
-        preservesPartitioning = true)
-    // acceptOf closes over the tombstone array + filter only (both
-    // serializable), so the composed function ships once per task —
-    // ONE composition site with the single-query path
-    val accept = acceptOf(filter)
-    val metric = config.metric // capture: the task closure must not drag `this`
-    val kk = k
-    val hits = shards.zipPartitions(byShard, preservesPartitioning = false) {
-      (sIt, qIt) =>
-        val qs = qIt.next()
-        sIt.toSeq.headOption match {
-          case None => Iterator.empty
-          case Some(shard) if scanSlice =>
-            // exact scan of the accepted slice: filter ONCE per shard per
-            // batch (accept tests are cheap; distances are paid only on
-            // accepted rows), then a bounded k-heap per query — the
-            // calibrate ground-truth pattern. Scores are the stored form
-            // (exported floats — exact under f32; dequantized/decoded
-            // under SQ8/PQ, restored downstream by the rescore, exactly
-            // like graph scores)
-            val rows = RoutedAnnIndex.rowsOf(shard)
-              .filter(r => accept == null || accept(r._1)).toArray
-            val ord = Ordering.by[(Double, Long), (Double, Long)] {
-              case (c, id) => (-c, id)
-            }
-            qs.iterator.flatMap { case (qid, v) =>
-              val h = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord)
-              var i = 0
-              while (i < rows.length) {
-                val e = (RoutedAnnIndex.closenessOf(metric, v, rows(i)._2),
-                  rows(i)._1)
-                if (h.size < kk) h.enqueue(e)
-                else if (ord.lt(e, h.head)) { h.dequeue(); h.enqueue(e) }
-                i += 1
-              }
-              h.iterator.map { case (c, id) => (qid, id, c) }
-            }
-          case Some(shard) => qs.iterator.flatMap { case (qid, v) =>
-            shard.topK(v, k, accept).map { case (cid, c) => (qid, cid, c) }
-          }
-        }
-    }
-    import spark.implicits._
-    val scored = hits.toDF("qid", "cid", "_closeness")
-      // replicas can surface from several probed shards — keep one (hash
-      // aggregate with map-side combine; cheap, and it guarantees the
-      // bounded fold below never sees a duplicate cid)
-      .groupBy("qid", "cid").agg(max(col("_closeness")).as("_closeness"))
-    // bounded per-task fold for the final rank — the candidate table is
-    // |q|·probes·k rows (80M at 100k queries), and window-sorting it was
-    // most of the super-linear growth ScaleJoin measured (SCALE.md r13)
-    val top = BoundedTopK.topK(scored, "qid", "cid", "_closeness", k)
-    // closeness is the shard ordering (-sqEuclidean under the euclidean
-    // metric); `sim` reports the IvfIndex convention — positive distance
-    val simExpr = config.metric match {
-      case Algorithm.EuclideanDistance => sqrt(-col("score"))
-      case _ => col("score")
-    }
-    top.select(col("qid"), col("cid"),
-      round(simExpr.cast("float").cast("double"), 4).as("sim"),
-      col("rank"))
-  }
+      probes: Int, filter: IdFilter = null): DataFrame =
+    TopKJoin(queries, qId, qVec, k, TopKJoin.Routed(this, probes, filter),
+      tail = None, TopKJoin.Sim)
 
   /** [[topKJoin]] with an EXACT float rescore of a `shortlist`-deep
     * candidate cut — the two-phase pattern quantized shards require for
@@ -314,43 +215,17 @@ final class RoutedAnnIndex(
     * defaults to k + the storage's [[NodeStorage.rescoreSlack]] (floored
     * at [[RoutedAnnIndex.RescoreSlack]]) — the engine hydration slack,
     * so the calibrated curve answers for the served path; PQ's wider
-    * coarse error gets the wider default automatically. */
+    * coarse error gets the wider default automatically. One batch top-k
+    * core ([[TopKJoin]]): routed source × the exact rescore tail, whose
+    * query side stays unhinted. */
   def topKJoinRescored(queries: DataFrame, qId: String, qVec: String,
       k: Int, probes: Int, exact: DataFrame,
       shortlist: Int = 0, filter: IdFilter = null): DataFrame = {
     val sl = if (shortlist > 0) shortlist
       else k + math.max(RoutedAnnIndex.RescoreSlack, storage.rescoreSlack)
-    require(sl >= k, s"shortlist ($sl) must be >= k ($k)")
-    val short = topKJoin(queries, qId, qVec, sl, probes, filter)
-      .select("qid", "cid")
-    val q = queries.select(col(qId).cast("long").as("qid"),
-        col(qVec).cast("array<float>").as("qv"))
-      .groupBy("qid").agg(min(col("qv")).as("qv"))
-    val metric = config.metric
-    // no broadcast HINT on the query side: calibration passes ~100 rows
-    // (AQE broadcasts those on its own) but a production batch join can
-    // carry millions of query vectors — a forced broadcast would be the
-    // scale hazard this arm exists to avoid; the join keys on qid, so
-    // the shuffle is shortlist-bounded on the left and |q| on the right
-    val scored = short
-      .join(exact.select(col("id").cast("long").as("cid"),
-        col("key").cast("array<float>").as("cv")), "cid")
-      .join(q, "qid")
-      .select(col("qid"), col("cid"),
-        Similarity.closeness(metric, col("cv"), col("qv")).as("_c"))
-      // the caller-supplied `exact` frame can be a user view with
-      // duplicate ids (the DSL TOPK corpus arm) — a duplicated cid would
-      // rank twice below where topKJoin's merge dedups; collapse here
-      // (shortlist-bounded, never a corpus-wide dropDuplicates)
-      .groupBy("qid", "cid").agg(max(col("_c")).as("_c"))
-    val top = BoundedTopK.topK(scored, "qid", "cid", "_c", k)
-    val sim = metric match {
-      case Algorithm.CosineSimilarity | Algorithm.DotProductSimilarity |
-           Algorithm.HNSW => col("score")
-      case _ => -col("score")
-    }
-    top.select(col("qid"), col("cid"),
-      round(sim.cast("float").cast("double"), 4).as("sim"), col("rank"))
+    TopKJoin(queries, qId, qVec, k, TopKJoin.Routed(this, probes, filter),
+      Some(TopKJoin.Tail(sl, exact.select(col("id").cast("long").as("cid"),
+        col("key").cast("array<float>").as("cv")))), TopKJoin.Sim)
   }
 
   import RoutedAnnIndex.Maintained
@@ -660,11 +535,7 @@ final class RoutedAnnIndex(
     * distance to the routing centroids (the k-means assignment geometry,
     * ties toward the lower shard index — [[IvfIndex.probeCells]]'s rule). */
   def probeShards(q: Array[Float], probes: Int): Seq[Int] =
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, Similarity.jvm.sqEuclidean(q, c)) }
-      .sortBy { case (i, d) => (d, i) }
-      .take(math.max(1, math.min(probes, numShards)))
-      .map(_._1)
+    TopKJoin.nearestCentroids(centroids, q, probes)
 
   /** Merged top-k over the `probes` nearest shards only: one job on the
     * pruned partition set (never a full fan-out), then the same bounded
@@ -683,16 +554,13 @@ final class RoutedAnnIndex(
     // advice — same fix as [[scanSearch]])
     val bq = sc.broadcast(q)
     val bacc = sc.broadcast((tombstones, filter))
-    val kk = k
     val local = sc.runJob(shards, (it: Iterator[AnnShard]) => {
       val (ts, f) = bacc.value
       val accept = RoutedAnnIndex.composeAccept(ts, f)
-      it.toSeq.flatMap(_.topK(bq.value, kk, accept))
+      it.toSeq.flatMap(_.topK(bq.value, k, accept))
     }, probe)
     bq.destroy(); bacc.destroy()
-    local.flatten.groupBy(_._1)
-      .map { case (id, xs) => (id, xs.map(_._2).max) }.toSeq
-      .sortBy { case (id, c) => (-c, id) }.take(k)
+    RoutedAnnIndex.mergeById(local.toSeq.flatten, k)
   }
 
   /** EXACT slice scan for sharp-filtered single-query search — the
@@ -724,33 +592,8 @@ final class RoutedAnnIndex(
     * sketch — megabytes for a sharp filter over a large store) ship as
     * broadcasts, once per executor instead of once per task, exactly as
     * [[AnnIndex.search]] does (r16 advice #2). */
-  def scanSearch(q: Array[Float], k: Int, filter: IdFilter = null): Seq[(Long, Double)] = {
-    val metric = config.metric // capture: the task closure must not drag `this`
-    val kk = k
-    val sc = shards.sparkContext
-    val bq = sc.broadcast(q)
-    val bacc = sc.broadcast((tombstones, filter))
-    val ord = Ordering.by[(Double, Long), (Double, Long)] {
-      case (c, id) => (-c, id) // head of this ordering = worst kept entry
-    }
-    val local = shards.mapPartitions { it =>
-      val (ts, f) = bacc.value
-      val accept = RoutedAnnIndex.composeAccept(ts, f)
-      val q2 = bq.value
-      val h = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord)
-      it.foreach(shard =>
-        RoutedAnnIndex.acceptedRowsOf(shard, accept).foreach { case (id, v) =>
-          val e = (RoutedAnnIndex.closenessOf(metric, q2, v), id)
-          if (h.size < kk) h.enqueue(e)
-          else if (ord.lt(e, h.head)) { h.dequeue(); h.enqueue(e) }
-        })
-      h.iterator.map { case (c, id) => (id, c) }
-    }.collect()
-    bq.destroy(); bacc.destroy()
-    local.groupBy(_._1)
-      .map { case (id, xs) => (id, xs.map(_._2).max) }.toSeq
-      .sortBy { case (id, c) => (-c, id) }.take(k)
-  }
+  def scanSearch(q: Array[Float], k: Int, filter: IdFilter = null): Seq[(Long, Double)] =
+    RoutedAnnIndex.sliceScan(shards, config.metric, q, k, tombstones, filter)
 
   /** Probes for a target recall, read off the PRIMARY (smallest-k)
     * measured curve: the SMALLEST calibrated probe count whose measured
@@ -899,32 +742,24 @@ final class RoutedAnnIndex(
       // exact ground truth: per-partition bounded heaps (kmax entries per
       // query), merged on the driver — partials are ≤ partitions×|q|×kmax;
       // LEAVE-ONE-OUT: a query's own row never enters its truth set
-      val ord = Ordering.by[(Double, Long), (Double, Long)] {
-        case (c, id) => (-c, id) // max of this ordering = worst kept entry
-      }
       val partials = live.mapPartitions { it =>
         val qs = bq.value
-        val heaps = Array.fill(qs.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
+        val heaps = Array.fill(qs.length)(new BoundedTopK.Heap(kmax))
         it.foreach { case (id, v) =>
           var i = 0
           while (i < qs.length) {
-            if (!qs(i)._1.contains(id)) { // LOO for self-samples only
-              val c = RoutedAnnIndex.closenessOf(metric, qs(i)._2, v)
-              val h = heaps(i)
-              if (h.size < kmax) h.enqueue((c, id))
-              else if (ord.lt((c, id), h.head)) { h.dequeue(); h.enqueue((c, id)) }
-            }
+            if (!qs(i)._1.contains(id)) // LOO for self-samples only
+              heaps(i).offer(id, RoutedAnnIndex.closenessOf(metric, qs(i)._2, v))
             i += 1
           }
         }
-        heaps.iterator.zipWithIndex.map { case (h, i) => (i, h.toArray) }
+        heaps.iterator.zipWithIndex.map { case (h, i) => (i, h.best) }
       }.collect()
       // rank-ordered merged truth per query; each k's set is its prefix
       val truthRanked: Map[Int, Array[Long]] = partials.groupBy(_._1).map {
         case (qi, parts) =>
-          qi -> parts.flatMap(_._2).sortBy { case (c, id) => (-c, id) }
-            .take(kmax).map(_._2)
+          qi -> parts.flatMap(_._2).sortBy { case (id, c) => (-c, id) }
+            .take(kmax).map(_._1)
       }
       val ladder = Calibration.ladder(ladderIn, numShards)
       import spark.implicits._
@@ -933,54 +768,31 @@ final class RoutedAnnIndex(
         .toDF("qid", "qv")
         .select(col("qid"), col("qv").cast("array<float>").as("qv"))
       // every (serving k, ladder point) arm is an INDEPENDENT read-only
-      // batch join over the shared shards/caches — previously run
-      // back-to-back, leaving the executors idle in each arm's tail.
-      // r18 (guide §2.6, VERDICT r17 item 3): run up to 3 arms
-      // concurrently from a small driver pool; each arm's served set is
-      // deterministic and the curves assemble in the same (k, p) order,
-      // so the measured numbers are byte-identical to the serial loop.
+      // batch join over the shared shards/caches
       val arms = for (k <- ks.sorted; p <- ladder) yield (k, p)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(3, arms.length)))
-      val curves = try {
-        val futs: Map[(Int, Int), java.util.concurrent.Future[Map[Int, Set[Long]]]] =
-          arms.map { case (k, p) =>
-            (k, p) -> pool.submit(
-              new java.util.concurrent.Callable[Map[Int, Set[Long]]] {
-                def call(): Map[Int, Set[Long]] = {
-                  // LOO on the result side too: ask for k+1, drop the
-                  // query's own id (rank-ordered, so the remaining prefix
-                  // is the top-k the index would return to a non-stored
-                  // query at this probe count). A quantized index measures
-                  // THROUGH the exact-rescored join — the path serving
-                  // rides — never the raw quantized ranking
-                  val served =
-                    if (quantized)
-                      topKJoinRescored(qdf, "qid", "qv", k + 1, p, exactCached.get)
-                    else topKJoin(qdf, "qid", "qv", k + 1, p)
-                  Calibration.rankedSets(
-                    served.select("qid", "cid", "rank").collect(), k, ownIds)
-                }
-              })
-          }.toMap
-        ks.sorted.map { k =>
-          val truth: Map[Int, Set[Long]] =
-            truthRanked.map { case (qi, r) => qi -> r.take(k).toSet }
-          val curve = ladder.map { p =>
-            val got = futs((k, p)).get()
-            val per = truth.toSeq.map { case (qi, ts) =>
-              if (ts.isEmpty) 1.0
-              else got.getOrElse(qi, Set.empty).count(ts).toDouble / ts.size
-            }
-            val (mean, se) = Calibration.meanSe(per)
-            org.slf4j.LoggerFactory.getLogger(getClass).info(
-              f"RoutedAnnIndex.calibrate: probes=$p%d recall@$k%d = " +
-                f"$mean%.4f +- $se%.4f se (${truth.size}%d sample queries)")
-            (p, mean, se)
-          }.toArray
-          (k, curve)
-        }.toArray
-      } finally pool.shutdown()
+      val served = Calibration.inParallel(arms) { case (k, p) =>
+        // LOO on the result side too: ask for k+1, drop the query's own
+        // id (rank-ordered, so the remaining prefix is the top-k the index
+        // would return to a non-stored query at this probe count). A
+        // quantized index measures THROUGH the exact-rescored join — the
+        // path serving rides — never the raw quantized ranking
+        val joined =
+          if (quantized) topKJoinRescored(qdf, "qid", "qv", k + 1, p, exactCached.get)
+          else topKJoin(qdf, "qid", "qv", k + 1, p)
+        Calibration.rankedSets(joined.select("qid", "cid", "rank").collect(), k, ownIds)
+      }
+      val got = arms.zip(served).toMap
+      val curves = ks.sorted.map { k =>
+        val truth: Map[Int, Set[Long]] =
+          truthRanked.map { case (qi, r) => qi -> r.take(k).toSet }
+        (k, ladder.map { p =>
+          val (mean, se) = Calibration.recall(truth, got((k, p)))
+          org.slf4j.LoggerFactory.getLogger(getClass).info(
+            f"RoutedAnnIndex.calibrate: probes=$p%d recall@$k%d = " +
+              f"$mean%.4f +- $se%.4f se (${truth.size}%d sample queries)")
+          (p, mean, se)
+        }.toArray)
+      }.toArray
       new RoutedAnnIndex(centroids, config, shards, replicationEps, iters,
         maxReplicas, meanAssignDist, patchedRows, tombstones, storedRows,
         curves, fp, storage)
@@ -1106,9 +918,11 @@ object RoutedAnnIndex {
     "ext:" + sampleFingerprint(
       Calibration.externalSample(qdf, qVecCol, nQueries, seed).map(_._2))
 
-  /** Closeness (DESC-better) under an index metric — the [[PatchedShard]]
-    * / HnswIndex scoring contract, shared so [[RoutedAnnIndex.calibrate]]'s
-    * exact ground truth ranks by the SAME order the shards do. */
+  /** Closeness (DESC-better) under an index metric: the negation of the
+    * float [[VecStore]] distance the HNSW graphs rank by. The ONE JVM
+    * closeness every exact shard-side score uses — [[PatchedShard]]
+    * overlay tails, the slice scans and calibration ground truth — so
+    * each ranks by the SAME order the graphs do. */
   private[ann] def closenessOf(metric: Algorithm, q: Array[Float],
       v: Array[Float]): Double = {
     val jvm = Similarity.jvm
@@ -1118,6 +932,40 @@ object RoutedAnnIndex {
       case _ => jvm.cosine(q, v)
     }
   }
+
+  /** EXACT slice scan of every shard partition for one query (the
+    * single-query sharp-filter arm of both sharded families): each
+    * partition filters its stored rows through the accept function once
+    * — the id is tested BEFORE the vector materializes
+    * ([[acceptedRowsOf]]) — into one bounded k-heap. The query and the
+    * accept state (tombstones + filter) ship as broadcasts, once per
+    * executor. The driver merge dedupes replica ids. */
+  private[ann] def sliceScan(shards: RDD[AnnShard], metric: Algorithm,
+      q: Array[Float], k: Int, tombstones: Array[Long],
+      filter: IdFilter): Seq[(Long, Double)] = {
+    val sc = shards.sparkContext
+    val bq = sc.broadcast(q)
+    val bacc = sc.broadcast((tombstones, filter))
+    val local = shards.mapPartitions { it =>
+      val (ts, f) = bacc.value
+      val accept = composeAccept(ts, f)
+      val qv = bq.value
+      val h = new BoundedTopK.Heap(k)
+      it.foreach(shard => acceptedRowsOf(shard, accept).foreach { case (id, v) =>
+        h.offer(id, closenessOf(metric, qv, v)) })
+      h.best.iterator
+    }.collect()
+    bq.destroy(); bacc.destroy()
+    mergeById(local, k)
+  }
+
+  /** Driver merge of per-shard (id, closeness) candidates: one entry per
+    * id (boundary replicas surface from several shards with identical
+    * closeness), best k by (closeness DESC, id ASC). */
+  private[ann] def mergeById(local: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] =
+    local.groupBy(_._1)
+      .map { case (id, xs) => (id, xs.map(_._2).max) }.toSeq
+      .sortBy { case (id, c) => (-c, id) }.take(k)
 
   /** Physical row count across shard structures, measured (one
     * metadata-only job over the cached shards — each partition reports
@@ -1161,10 +1009,9 @@ object RoutedAnnIndex {
   }
 
   /** Tombstone-aware accept composed with an optional caller filter,
-    * null when nothing filters — the task-side twin of the instance
-    * [[RoutedAnnIndex.acceptOf]], taking the tombstone array explicitly
-    * so a task closure can compose it from a broadcast instead of
-    * dragging `this`. */
+    * null when nothing filters (the no-overhead fast path). Takes the
+    * tombstone array explicitly so a task closure can compose it from a
+    * broadcast instead of dragging the index handle. */
   private[ann] def composeAccept(ts: Array[Long],
       filter: IdFilter): Long => Boolean =
     if (ts.isEmpty) { if (filter == null) null else filter.accept _ }
@@ -1221,7 +1068,7 @@ object RoutedAnnIndex {
 
   /** Identity partitioner on the routed shard id (same shape as
     * AnnIndex's bucket partitioner, keyed by centroid assignment). */
-  private final class ShardPartitioner(val n: Int)
+  private[ann] final class ShardPartitioner(val n: Int)
       extends org.apache.spark.Partitioner {
     override def numPartitions: Int = n
     override def getPartition(key: Any): Int = key.asInstanceOf[Int]
@@ -1686,7 +1533,7 @@ object RoutedAnnIndex {
           col("id"), col("key"))
       else {
         // rank every centroid per row (one native CentroidDists pass —
-        // the cellRankExpr shape), keep the nearest maxReplicas whose
+        // the TopKJoin.nearestCentroids shape), keep the nearest maxReplicas whose
         // SQUARED distance is within (1+eps)² of the nearest's
         import org.apache.spark.sql.graftbridge.{CentroidDists, ColumnBridge}
         import graft.functions.GraftFunctions.bind

@@ -2,6 +2,7 @@ package graft.ann
 
 import scala.collection.mutable
 
+import graft.functions.Quantize.dequantized
 import graft.functions.Similarity.jvm
 import graft.types.Algorithm
 
@@ -347,11 +348,10 @@ private[ann] final class Sq8VecStore(metric: Algorithm) extends VecStore {
 
   def export(i: Int): Array[Float] = {
     val c = codes(i); val mn = mns(i).toDouble; val mx = mxs(i).toDouble
-    val step = (mx - mn) / 255.0
     val out = new Array[Float](c.length)
     var j = 0
     while (j < c.length) {
-      out(j) = (mn + (c(j) & 0xFF).toDouble * step).toFloat
+      out(j) = dequantized((c(j) & 0xFF).toDouble, mn, mx).toFloat
       j += 1
     }
     out
@@ -361,32 +361,30 @@ private[ann] final class Sq8VecStore(metric: Algorithm) extends VecStore {
   // over dequantized elements in one ascending pass — the jvm kernel
   // operation order over Quantize.dequantize values, zero allocations
   def distNodes(i: Int, j: Int): Double = {
-    val ca = codes(i); val mna = mns(i).toDouble
-    val stepA = (mxs(i).toDouble - mna) / 255.0
-    val cb = codes(j); val mnb = mns(j).toDouble
-    val stepB = (mxs(j).toDouble - mnb) / 255.0
+    val ca = codes(i); val mna = mns(i).toDouble; val mxa = mxs(i).toDouble
+    val cb = codes(j); val mnb = mns(j).toDouble; val mxb = mxs(j).toDouble
     metric match {
       case Algorithm.EuclideanDistance =>
         var s = 0.0; var x = 0
         while (x < ca.length) {
-          val t = (mna + (ca(x) & 0xFF).toDouble * stepA) -
-            (mnb + (cb(x) & 0xFF).toDouble * stepB)
+          val t = dequantized((ca(x) & 0xFF).toDouble, mna, mxa) -
+            dequantized((cb(x) & 0xFF).toDouble, mnb, mxb)
           s += t * t; x += 1
         }
         s
       case Algorithm.DotProductSimilarity =>
         var s = 0.0; var x = 0
         while (x < ca.length) {
-          s += (mna + (ca(x) & 0xFF).toDouble * stepA) *
-            (mnb + (cb(x) & 0xFF).toDouble * stepB)
+          s += dequantized((ca(x) & 0xFF).toDouble, mna, mxa) *
+            dequantized((cb(x) & 0xFF).toDouble, mnb, mxb)
           x += 1
         }
         -s
       case _ =>
         var dp = 0.0; var na = 0.0; var nb = 0.0; var x = 0
         while (x < ca.length) {
-          val a = mna + (ca(x) & 0xFF).toDouble * stepA
-          val b = mnb + (cb(x) & 0xFF).toDouble * stepB
+          val a = dequantized((ca(x) & 0xFF).toDouble, mna, mxa)
+          val b = dequantized((cb(x) & 0xFF).toDouble, mnb, mxb)
           dp += a * b; na += a * a; nb += b * b; x += 1
         }
         if (na == 0.0 || nb == 0.0) 0.0
@@ -395,20 +393,19 @@ private[ann] final class Sq8VecStore(metric: Algorithm) extends VecStore {
   }
 
   def distQuery(q: Array[Float], i: Int): Double = {
-    val c = codes(i); val mn = mns(i).toDouble
-    val step = (mxs(i).toDouble - mn) / 255.0
+    val c = codes(i); val mn = mns(i).toDouble; val mx = mxs(i).toDouble
     metric match {
       case Algorithm.EuclideanDistance =>
         var s = 0.0; var x = 0
         while (x < c.length) {
-          val t = q(x).toDouble - (mn + (c(x) & 0xFF).toDouble * step)
+          val t = q(x).toDouble - dequantized((c(x) & 0xFF).toDouble, mn, mx)
           s += t * t; x += 1
         }
         s
       case Algorithm.DotProductSimilarity =>
         var s = 0.0; var x = 0
         while (x < c.length) {
-          s += q(x).toDouble * (mn + (c(x) & 0xFF).toDouble * step)
+          s += q(x).toDouble * dequantized((c(x) & 0xFF).toDouble, mn, mx)
           x += 1
         }
         -s
@@ -416,7 +413,7 @@ private[ann] final class Sq8VecStore(metric: Algorithm) extends VecStore {
         var dp = 0.0; var nq = 0.0; var nb = 0.0; var x = 0
         while (x < c.length) {
           val a = q(x).toDouble
-          val b = mn + (c(x) & 0xFF).toDouble * step
+          val b = dequantized((c(x) & 0xFF).toDouble, mn, mx)
           dp += a * b; nq += a * a; nb += b * b; x += 1
         }
         if (nq == 0.0 || nb == 0.0) 0.0

@@ -942,20 +942,19 @@ object Dedup {
       .select(col("id").as(idCol), col("cleaned"))
   }
 
-  /** Brute-force top-k similarity JOIN: every query row × corpus, scored,
-    * per-query bounded top-k via window rank. Broadcast the (small) query
-    * side; the corpus streams — the baseline batch k-NN join
-    * (N queries × M corpus; the reference has only single-query GetSimN). */
+  /** Brute-force top-k similarity JOIN: every query row × corpus, scored
+    * by exact cosine, per-query bounded top-k. Broadcast the (small)
+    * query side; the corpus streams — the baseline batch k-NN join
+    * (N queries × M corpus; the reference has only single-query GetSimN).
+    * One batch top-k core ([[graft.ann.TopKJoin]]): broadcast source ×
+    * exact scorer, no rescore. Returns (qid, cid, cos, rank); a repeated
+    * qid is one query (its min(qv) row). */
   def topKJoin(queries: DataFrame, corpus: DataFrame, qId: String, qVec: String,
       cId: String, cVec: String, k: Int): DataFrame = {
-    val scored = broadcast(queries.select(col(qId).as("qid"), col(qVec).as("qv")))
-      .crossJoin(corpus.select(col(cId).as("cid"), col(cVec).as("cv")))
-      .select(col("qid"), col("cid"), cosine(col("qv"), col("cv")).as("cos"))
-    // bounded per-task fold, never a window sort of the |q|·|corpus|
-    // product: the window formulation SPILLED A 65 GB DISK at 10k × 200k
-    // (graft.ScaleJoin, round 13) — sorting 2B rows to keep 500k
-    graft.ann.BoundedTopK.topK(scored, "qid", "cid", "cos", k)
-      .select(col("qid"), col("cid"), round(col("score"), 4).as("cos"),
-        col("rank"))
+    import graft.ann.TopKJoin
+    TopKJoin(queries, qId, qVec, k,
+      TopKJoin.Broadcast(corpus.select(col(cId).as("cid"), col(cVec).as("cv")),
+        TopKJoin.Exact(graft.types.Algorithm.CosineSimilarity)),
+      tail = None, TopKJoin.Cos)
   }
 }

@@ -206,8 +206,13 @@ object Command {
   final case class ExtLineSignals(view: String, id: String, text: String)
       extends Command
   /** Acceleration arm for [[ExtTopK]] — mirrors the library's top-k
-    * family: exact broadcast scan, SQ8 two-phase, IVF partition pruning,
-    * and the SQ8×IVF composition. */
+    * family, every arm an alias over the one batch top-k core
+    * (ann.TopKJoin): a candidate source (broadcast cross join, IVF probed
+    * cells, routed shard graphs) × a coarse scorer (exact closeness, SQ8,
+    * PQ ADC) × the exact rescore tail for the inexact scorers. Exact =
+    * broadcast × exact; Quantized = broadcast × SQ8; Ivf = cells × exact
+    * (or × SQ8 with a shortlist); Pq = broadcast × ADC; IvfPq = cells ×
+    * ADC; Routed = routed graphs (rescored when the storage is quantized). */
   sealed trait TopKMode
   object TopKMode {
     case object Exact extends TopKMode

@@ -53,6 +53,14 @@ object Quantize {
   def dequantize(codes: Column, mn: Column, mx: Column): Column =
     transform(codes, q => mn + q.cast("double") * (mx - mn) / 255.0)
 
+  /** One dequantized element in the JVM: `mn + (q · (mx − mn)) / 255`,
+    * the operation order of [[dequantize]] (and of the DuckDB oracle).
+    * Every JVM-side SQ8 scorer — the [[org.apache.spark.sql.graftbridge
+    * .Sq8Cosine]] kernel and the routed graphs' SQ8 node storage — calls
+    * this one definition, so the two can never differ in the last bit. */
+  @inline def dequantized(q: Double, mn: Double, mx: Double): Double =
+    mn + q * (mx - mn) / 255.0
+
   /** The coarse score: cosine over two quantized vectors, dequantizing
     * INLINE in one fused native codegen'd loop
     * ([[org.apache.spark.sql.graftbridge.Sq8Cosine]]) — bit-identical to
@@ -87,38 +95,15 @@ object Quantize {
     * corpus size` degrades to exactly the brute-force result (QuantizeSpec
     * pins that identity); practical settings (e.g. 8·k) trade quantization-
     * bounded recall loss for the IO cut. Both phases are deterministic
-    * (fixed-order double math, ties by cid) — an engine-portable pipeline. */
+    * (fixed-order double math, ties by cid) — an engine-portable pipeline.
+    * One batch top-k core ([[graft.ann.TopKJoin]]): broadcast source ×
+    * SQ8 scorer × exact rescore tail; a repeated qid is one query. */
   def quantizedTopKJoin(queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, shortlist: Int): DataFrame = {
-    require(k > 0, s"k must be > 0, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    def quantized(df: DataFrame, id: String, vec: String, p: String): DataFrame = {
-      val (mn, mx) = quantParams(col(vec))
-      df.select(col(id).as(s"${p}id"), col(vec).as(s"${p}v"),
-        int8Codes(col(vec)).as(s"${p}codes"), mn.as(s"${p}mn"), mx.as(s"${p}mx"))
-    }
-    val q = quantized(queries, qId, qVec, "q")
-    val c = quantized(corpus, cId, cVec, "c")
-    // the coarse pass carries CODES ONLY across the |q|·|corpus| cross
-    // product (float vectors re-attach for the shortlist rescore — they
-    // used to ride the widest stage), and both rankings go through the
-    // bounded per-task fold ([[graft.ann.BoundedTopK]]) instead of a
-    // window sort of the full cross product
-    val coarse = broadcast(q.drop("qv")).crossJoin(c.drop("cv"))
-      .select(col("qid"), col("cid"), coarseCosine(
-        col("qcodes"), col("qmn"), col("qmx"),
-        col("ccodes"), col("cmn"), col("cmx")).as("s_coarse"))
-    val short = graft.ann.BoundedTopK.topK(coarse, "qid", "cid", "s_coarse",
-        shortlist)
-      .select("qid", "cid")
-    val exact = short
-      .join(corpus.select(col(cId).as("cid"), col(cVec).as("cv")), "cid")
-      .join(broadcast(queries.select(col(qId).as("qid"), col(qVec).as("qv"))),
-        "qid")
-      .select(col("qid"), col("cid"),
-        Similarity.cosineSimilarity(col("qv"), col("cv")).as("cos"))
-    graft.ann.BoundedTopK.topK(exact, "qid", "cid", "cos", k)
-      .select(col("qid"), col("cid"), round(col("score"), 4).as("cos"), col("rank"))
+    import graft.ann.TopKJoin
+    val c = corpus.select(col(cId).as("cid"), col(cVec).as("cv"))
+    TopKJoin(queries, qId, qVec, k, TopKJoin.Broadcast(c, TopKJoin.Sq8),
+      Some(TopKJoin.Tail(shortlist, c)), TopKJoin.Cos)
   }
 }

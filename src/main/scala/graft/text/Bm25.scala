@@ -60,7 +60,7 @@ object Bm25 {
     // .distinct() after the explode: array_distinct only dedups WITHIN a
     // row, so a queries frame carrying duplicate qid rows would otherwise
     // double-count every term's contribution — the DuckDB oracle's
-    // `SELECT DISTINCT qid, tok` and IvfIndex.dedupedQueries both dedup
+    // `SELECT DISTINCT qid, tok` and TopKJoin.queries both dedup
     // globally for exactly this reason. The frame is k-bounded per query,
     // so the extra exchange is negligible (and folds into the broadcast).
     val qterms = queries.select(col(qIdCol).as("qid"),

@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, LongType}
 
+import graft.functions.Quantize
+
 /**
  * Fused SQ8 coarse-cosine kernel: cosine over two int8-quantized vectors,
  * dequantizing inline — `x_i = mn + (q_i · (mx − mn)) / 255` — in one tight
@@ -20,8 +22,9 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
  * and allocates three intermediate arrays per pair.
  *
  * Numeric contract — BIT-IDENTICAL to the HOF/oracle formulation
- * (QuantizeSpec pins it): per element, dequantize as
- * `mn + ((double) q · (mx − mn)) / 255.0` (that exact operation order);
+ * (QuantizeSpec pins it): per element, dequantize through
+ * [[graft.functions.Quantize.dequantized]] (`mn + (q · (mx − mn)) / 255`,
+ * that exact operation order — eval and codegen call the same method);
  * dot and both squared norms accumulate left-to-right in double; result is
  * `dot / (sqrt(na) · sqrt(nb))` with NO zero-norm guard (the HOF and the
  * DuckDB oracle divide unconditionally — an all-zero code vector yields
@@ -47,13 +50,11 @@ case class Sq8Cosine(codesA: Expression, mnA: Expression, mxA: Expression,
     val b = vals(3).asInstanceOf[ArrayData]
     val (amn, amx) = (vals(1).asInstanceOf[Double], vals(2).asInstanceOf[Double])
     val (bmn, bmx) = (vals(4).asInstanceOf[Double], vals(5).asInstanceOf[Double])
-    val sa = amx - amn
-    val sb = bmx - bmn
     val n = math.min(a.numElements(), b.numElements())
     var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
-      val xa = amn + (a.getLong(i).toDouble * sa) / 255.0
-      val xb = bmn + (b.getLong(i).toDouble * sb) / 255.0
+      val xa = Quantize.dequantized(a.getLong(i).toDouble, amn, amx)
+      val xb = Quantize.dequantized(b.getLong(i).toDouble, bmn, bmx)
       d += xa * xb; na += xa * xa; nb += xb * xb; i += 1
     }
     d / (math.sqrt(na) * math.sqrt(nb))
@@ -65,19 +66,17 @@ case class Sq8Cosine(codesA: Expression, mnA: Expression, mxA: Expression,
       if (nullable) evs.map(e => e.isNull.toString).mkString(" || ") else "false"
     val (a, amn, amx, b, bmn, bmx) =
       (evs(0).value, evs(1).value, evs(2).value, evs(3).value, evs(4).value, evs(5).value)
-    val sa = ctx.freshName("sa"); val sb = ctx.freshName("sb")
     val n = ctx.freshName("n"); val i = ctx.freshName("i")
     val d = ctx.freshName("d"); val na = ctx.freshName("na")
     val nb = ctx.freshName("nb")
     val xa = ctx.freshName("xa"); val xb = ctx.freshName("xb")
+    val dq = "graft.functions.Quantize.dequantized"
     val compute =
-      s"""double $sa = $amx - $amn;
-         |double $sb = $bmx - $bmn;
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+      s"""int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $d = 0.0; double $na = 0.0; double $nb = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
-         |  double $xa = $amn + (((double) $a.getLong($i)) * $sa) / 255.0;
-         |  double $xb = $bmn + (((double) $b.getLong($i)) * $sb) / 255.0;
+         |  double $xa = $dq((double) $a.getLong($i), $amn, $amx);
+         |  double $xb = $dq((double) $b.getLong($i), $bmn, $bmx);
          |  $d += $xa * $xb; $na += $xa * $xa; $nb += $xb * $xb;
          |}
          |${ev.value} = $d / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));""".stripMargin

@@ -297,6 +297,98 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally ivf.unpersist()
   }
 
+  /** A join keyed on `key` — whichever equi-join strategy the planner
+    * picked (a cached cells frame can be small enough to broadcast). */
+  private def equiJoinOn(key: String, p: String): Boolean =
+    s"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin) \\[$key#".r
+      .findFirstIn(p).isDefined
+
+  private lazy val ivfVecs = (0 until 32).map(i =>
+    (i.toLong, Seq(i.toFloat, (i % 3).toFloat, 2f, 1f))).toDF("id", "key")
+
+  test("IVF top-k: queries reach the corpus through the cell equi-join only") {
+    val ivf = graft.ann.IvfIndex.build(ivfVecs, nCells = 4, iters = 1)
+    try {
+      val (stages, _) = stagePlans(ivf.topKJoin(
+        ivfVecs.where(col("id") < 2).select(col("id"), col("key").as("v")),
+        "id", "v", k = 2, nProbe = 4))
+      assert(stages.length == 1, s"one scoring stage expected: $stages")
+      val p = stages.head
+      assert(equiJoinOn("cell", p), s"probes must join the cells on cell; plan:\n$p")
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"no all-pairs product; plan:\n$p")
+    } finally ivf.unpersist()
+  }
+
+  test("PQ-in-IVF top-k: cell equi-join coarse pass, broadcast query rescore") {
+    val ivf = graft.ann.IvfIndex.build(ivfVecs, nCells = 4, iters = 1)
+    val cb = graft.ann.PqCodebook.train(ivfVecs, m = 2, ksub = 4, iters = 1)
+    try {
+      val (stages, _) = stagePlans(ivf.pqTopKJoin(
+        ivfVecs.where(col("id") < 2).select(col("id"), col("key").as("v")),
+        "id", "v", k = 2, nProbe = 4, shortlist = 8, cb = cb))
+      assert(stages.length == 2, s"coarse + exact stages expected: $stages")
+      val (coarse, exact) = (stages.head, stages(1))
+      assert(equiJoinOn("cell", coarse), s"coarse pass must be the cell equi-join; plan:\n$coarse")
+      assert(!stages.mkString.contains("CartesianProduct") &&
+        !stages.mkString.contains("BroadcastNestedLoopJoin"),
+        s"no all-pairs product; plans:\n$stages")
+      assert(coarse.contains("codes"), s"coarse must rank codes; plan:\n$coarse")
+      assert(exact.contains("BroadcastHashJoin"),
+        s"query rescore side must broadcast; plan:\n$exact")
+    } finally ivf.unpersist()
+  }
+
+  private def routedIndex(storage: graft.ann.StorageSpec) = {
+    val vecs = (0 until 64).map(i => (i.toLong,
+      Seq(graft.TestFixtures.vec(11L, i.toLong, 4): _*))).toDF("id", "key")
+    val cfg = graft.types.NonLinearConfig.HNSWConfig(efConstruction = 16,
+      maximumConnections = 4, maximumConnectionsZero = 8, efSearch = 8)
+    (vecs, graft.ann.RoutedAnnIndex.build(vecs, 4, cfg, numShards = 4,
+      iters = 1, storage = storage))
+  }
+
+  test("routed top-k: queries meet the shard graphs without any join") {
+    val (vecs, idx) = routedIndex(graft.ann.StorageSpec.F32)
+    try {
+      val (stages, _) = stagePlans(idx.topKJoin(
+        vecs.where(col("id") < 3).select(col("id"), col("key").as("v")),
+        "id", "v", k = 2, probes = 2))
+      assert(stages.length == 1, s"one candidate stage expected: $stages")
+      // the graph search is a zip of the shard RDD with the routed query
+      // partitions: no query × corpus join of any kind plans at all
+      val p = stages.head
+      assert(!p.contains("Join") && !p.contains("CartesianProduct"),
+        s"candidates must come from the shard graphs; plan:\n$p")
+    } finally idx.unpersist()
+  }
+
+  test("routed rescored top-k: equi-join tail with an UNHINTED query side") {
+    val (vecs, idx) = routedIndex(graft.ann.StorageSpec.Sq8)
+    // with size-based broadcasting off, only a broadcast HINT can plan a
+    // broadcast: a large production query batch must shuffle-join
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val (stages, _) = stagePlans(idx.topKJoinRescored(
+        vecs.where(col("id") < 3).select(col("id"), col("key").as("v")),
+        "id", "v", k = 2, probes = 2, exact = vecs))
+      assert(stages.length == 2, s"candidate + rescore stages expected: $stages")
+      val tail = stages(1)
+      assert(equiJoinOn("cid", tail) && equiJoinOn("qid", tail),
+        s"the rescore re-attaches vectors by cid and queries by qid; plan:\n$tail")
+      assert(!stages.mkString.contains("CartesianProduct") &&
+        !stages.mkString.contains("BroadcastNestedLoopJoin"),
+        s"no all-pairs product; plans:\n$stages")
+      assert(!tail.contains("BroadcastHashJoin") && !tail.contains("BroadcastExchange"),
+        s"the rescore's query side must not be broadcast-hinted; plan:\n$tail")
+    } finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      idx.unpersist()
+    }
+  }
+
   test("PQ top-k: codes-only coarse scan, broadcast queries, shared qid exchange") {
     val vecs = (0 until 32).map(i =>
       (i.toLong, Seq(i.toFloat, (i % 3).toFloat, 2f, 1f))).toDF("id", "key")

@@ -58,6 +58,19 @@ class BoundedTopKSpec extends AnyFunSuite {
     finally BoundedTopK.flushEntriesOverride.remove()
   }
 
+  test("a repeated (qid, cid) ranks once, at its best score — flushed partials too") {
+    // every pair twice: once as is, once with a different score — the
+    // fold must equal the window over the per-pair max
+    val base = frame(nQ = 30, perQ = 60)
+    val dup = base.union(base.withColumn("s", (col("s") * 7.0 + 0.3) % 1.0))
+      .repartition(4)
+    val expect = viaWindow(dup.groupBy("qid", "cid").agg(max(col("s")).as("s")), 5)
+    assert(viaFold(dup, 5) == expect)
+    BoundedTopK.flushEntriesOverride.set(Integer.valueOf(15))
+    try assert(viaFold(dup, 5) == expect, "merged partials must dedup ids too")
+    finally BoundedTopK.flushEntriesOverride.remove()
+  }
+
   test("degenerate shapes: k > candidates, empty input, null rows ignored") {
     val tiny = Seq((1L, 10L, 0.5), (1L, 11L, 0.5), (2L, 12L, 0.1))
       .toDF("qid", "cid", "s")

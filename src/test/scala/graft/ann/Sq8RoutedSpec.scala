@@ -80,6 +80,43 @@ class Sq8RoutedSpec extends AnyFunSuite {
     assert(st2.payload(0) == st.payload(0))
   }
 
+  test("Sq8VecStore scores bit-identically to Quantize.dequantize then the Similarity fold") {
+    // the graph's inline dequantize must be the Catalyst column's element,
+    // to the last bit: random non-constant Gaussian vectors, every metric
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.functions.{Quantize, Similarity}
+    val rnd = new scala.util.Random(2024)
+    val d = 64
+    val rows = (0 until 300).map(_ => Array.fill(d)(rnd.nextGaussian().toFloat))
+    val qs = (0 until 300).map(_ => Array.fill(d)(rnd.nextGaussian().toFloat))
+    Seq(Algorithm.CosineSimilarity, Algorithm.DotProductSimilarity,
+        Algorithm.EuclideanDistance).foreach { metric =>
+      val st = new Sq8VecStore(metric)
+      rows.foreach(st.add)
+      val frame = rows.indices.map { i =>
+        val VecPayload.Sq8(c, mn, mx) = st.payload(i)
+        (i, qs(i).toSeq, c.map(b => (b & 0xFF).toLong).toSeq, mn.toDouble, mx.toDouble)
+      }.toDF("i", "q", "c", "mn", "mx")
+      val dq = Quantize.dequantize(col("c"), col("mn"), col("mx"))
+      // the store's distances: -cos, -dot, squared euclidean
+      val ref = metric match {
+        case Algorithm.CosineSimilarity => -Similarity.hof.cosineSimilarity(col("q"), dq)
+        case Algorithm.DotProductSimilarity => -Similarity.hof.dotProduct(col("q"), dq)
+        case _ => Similarity.hof.squaredEuclidean(col("q"), dq)
+      }
+      val want = frame.select(col("i"), ref).collect()
+        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      val off = rows.indices.filter { i =>
+        java.lang.Double.doubleToRawLongBits(st.distQuery(qs(i), i)) !=
+          java.lang.Double.doubleToRawLongBits(want(i))
+      }
+      if (off.nonEmpty) fail(s"$metric: ${off.size} of ${rows.size} distances " +
+        s"differ from dequantize-then-score, e.g. row ${off.head}")
+    }
+  }
+
   test("quantized routed serving path (graph + exact rescore) reaches exact-grade recall; raw quantized ranking reads lower") {
     val s = spark
     import s.implicits._
