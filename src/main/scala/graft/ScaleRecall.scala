@@ -15,7 +15,7 @@ import graft.types.{Algorithm, NonLinearConfig}
  * Recall@K over a query sample vs exact top-K) applied at the scale the
  * repo claims:
  *
- *  - sharded HNSW ([[graft.ann.AnnIndex]], 16 shards, reference build
+ *  - id-hash sharded HNSW ([[graft.ann.RoutedAnnIndex.buildHashed]], 16 shards, reference build
  *    params M=40/M0=80/efC=100) — threshold: ≥ 0.90 (hnsw.md:1026-1093);
  *  - IVF ([[graft.ann.IvfIndex]], 256 cells) over an nProbe sweep — the
  *    recall/scan-fraction CURVE, with the operating point recorded;
@@ -148,13 +148,13 @@ object ScaleRecall {
         maximumConnections = 40, maximumConnectionsZero = 80,
         efSearch = 16, metric = Algorithm.CosineSimilarity)
       val index = timed("hnsw build (16 shards)") {
-        graft.ann.AnnIndex.build(emb, 64, cfg, numShards = Some(16))
+        graft.ann.RoutedAnnIndex.buildHashed(emb, 64, cfg, numShards = 16)
       }
       val qvecs = queries.collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
       val rec = timed("hnsw search") {
         val per = qvecs.map { case (q, v) =>
-          val got = index.search(v, K).map(_._1).toSet
+          val got = index.search(v, K, index.numShards).map(_._1).toSet
           (gtByQ(q) & got).size.toDouble / gtByQ(q).size }
         per.sum / per.length
       }

@@ -58,9 +58,11 @@ object BoundedTopK {
     * best score: the kept set is the top k DISTINCT ids, so a candidate
     * table that repeats an id (boundary replicas, a user view with
     * duplicate ids) ranks it once. The one k-heap every exact top-k
-    * shares — the fold's per-qid buffers, the single-query slice scans
-    * ([[AnnIndex.scanSearch]], [[RoutedAnnIndex.scanSearch]]), the
-    * routed join's slice-scan arm and calibration ground truth. */
+    * shares — the fold's per-qid buffers, the single-query slice scan
+    * ([[RoutedAnnIndex.scanSearch]]), the routed join's slice-scan arm,
+    * an overlay shard's graph ∪ tail merge ([[PatchedShard]]), the
+    * KD-tree's branch-and-bound ([[KdTree.nNearest]]) and calibration
+    * ground truth. */
   private[ann] final class Heap(k: Int) {
     private var n = 0
     private val ids = new Array[Long](k)
@@ -88,6 +90,10 @@ object BoundedTopK {
         }
       } else { ids(0) = id; ss(0) = s; siftDown(0) }
     }
+    /** Whether k ids are kept (offers must now beat [[worst]]). */
+    def full: Boolean = n == ids.length
+    /** The worst kept score; defined once something is kept. */
+    def worst: Double = ss(0)
     /** Restore the heap below `from` after its entry got better. */
     private def siftDown(from: Int): Unit = {
       var i = from

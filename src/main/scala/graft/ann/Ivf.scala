@@ -341,7 +341,7 @@ object IvfIndex {
 
   // ------------------------------------------------------ artifact IO
   //
-  // The HNSW/KD shards persist (AnnIndex.save) but IVF used to retrain
+  // The HNSW/KD shards persist (RoutedAnnIndex.save) but IVF used to retrain
   // k-means and re-partition on every process. Its natural artifact is
   // different from a graph's: the index IS (a) the k centroids — tiny,
   // driver-side — and (b) the cell-stamped corpus, whose scale-native

@@ -65,38 +65,36 @@ final class KdTree(val dim: Int) extends Serializable {
     node
   }
 
+  /** Stored (id, vector) rows. Callers must not mutate. */
+  def entries: Iterator[(Long, Array[Float])] = ids.indices.iterator.map(i => (ids(i), vecs(i)))
+
+  /** Stored content ids. */
+  def idsIterator: Iterator[Long] = ids.iterator
+
   /** Exact n-nearest (squared euclidean), optional accept filter on id.
     * Returns (id, sqDist) ascending, ties on id. */
   def nNearest(q: Array[Float], n: Int, accept: Long => Boolean = null): Seq[(Long, Double)] = {
     if (root < 0 || n <= 0) return Nil
-    // bounded max-heap of size n (heap.rs:7-69 analog); worst element =
-    // (largest dist, then largest id), so eviction keeps smaller ids on
-    // exact distance ties — the documented (dist, id ASC) tie-break
-    implicit val ord: Ordering[(Long, Double)] =
-      Ordering.by[(Long, Double), (Double, Long)](t => (t._2, t._1))
-    val heap = mutable.PriorityQueue.empty[(Long, Double)]
+    // bounded k-heap at closeness = -sqDist (heap.rs:7-69 analog): its
+    // (closeness DESC, id ASC) order keeps smaller ids on exact distance
+    // ties — the documented (dist, id ASC) tie-break
+    val heap = new BoundedTopK.Heap(n)
 
     def visit(node: Int, depth: Int): Unit = {
       if (node < 0) return
       val axis = depth % dim
       val v = vecs(node)
-      if (accept == null || accept(ids(node))) {
-        val d = jvm.sqEuclidean(q, v)
-        if (heap.size < n) heap.enqueue((ids(node), d))
-        else if (d < heap.head._2 ||
-            (d == heap.head._2 && ids(node) < heap.head._1)) {
-          heap.dequeue(); heap.enqueue((ids(node), d))
-        }
-      }
+      if (accept == null || accept(ids(node)))
+        heap.offer(ids(node), -jvm.sqEuclidean(q, v))
       val diff = q(axis).toDouble - v(axis).toDouble
       val (near, far) = if (diff < 0) (left(node), right(node)) else (right(node), left(node))
       visit(near, depth + 1)
       // prune: hyperplane farther than current worst (must not prune while
       // the heap is not yet full)
-      if (heap.size < n || diff * diff <= heap.head._2) visit(far, depth + 1)
+      if (!heap.full || diff * diff <= -heap.worst) visit(far, depth + 1)
     }
 
     visit(root, 0)
-    heap.dequeueAll.reverse.sortBy((t: (Long, Double)) => (t._2, t._1))
+    heap.best.toSeq.map { case (id, c) => (id, -c) }
   }
 }

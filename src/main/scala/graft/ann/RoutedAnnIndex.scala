@@ -3,61 +3,132 @@ package graft.ann
 import java.util.Arrays
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.functions.Similarity
-import graft.types.{Algorithm, NonLinearConfig}
+import graft.engine.GraftEngine
+import graft.functions.{Predicates, Similarity}
+import graft.types.{Algorithm, GraftException, NonLinearConfig, PredicateCondition, StoreSchema}
+
+/** One shard's searcher: an HNSW graph or a KD-tree, possibly under
+  * overlay-tail layers ([[PatchedShard]]). */
+sealed trait AnnShard extends Serializable {
+  /** Local top-k as (id, closeness DESC-better), distinct ids. */
+  def topK(q: Array[Float], k: Int, accept: Long => Boolean): Seq[(Long, Double)]
+}
+
+@SerialVersionUID(1L)
+final class HnswShard(val index: HnswIndex, efSearch: Int) extends AnnShard {
+  def topK(q: Array[Float], k: Int, accept: Long => Boolean): Seq[(Long, Double)] =
+    index.search(q, k, efSearch, accept)
+}
+
+@SerialVersionUID(1L)
+final class KdShard(val tree: KdTree) extends AnnShard {
+  def topK(q: Array[Float], k: Int, accept: Long => Boolean): Seq[(Long, Double)] =
+    tree.nNearest(q, k, accept).map { case (id, d) => (id, -d) }
+}
+
+/** Immutable append OVERLAY: the base searcher stays frozen, appended rows
+  * live in a flat tail searched exactly (brute force) and merged with the
+  * base's candidates — the memtable-beside-immutable-index pattern, used
+  * by [[RoutedAnnIndex.append]] so insert-only growth never rebuilds a
+  * shard. Scoring mirrors [[HnswIndex]]'s closeness exactly (same
+  * [[graft.functions.Similarity.jvm]] kernels, closeness = -distance), so
+  * a merged ordering is indistinguishable from one grown graph; appended
+  * rows are scored EXACTLY, which can only help recall. Overlays nest
+  * (append-on-append); compaction is the caller's rebuild guard. */
+@SerialVersionUID(1L)
+final class PatchedShard(val base: AnnShard, extraIds: Array[Long],
+    extraVecs: Array[Array[Float]], metric: Algorithm) extends AnnShard {
+  def extraRows: Int = extraIds.length
+  def extraEntries: Iterator[(Long, Array[Float])] =
+    extraIds.iterator.zip(extraVecs.iterator)
+  def extraIdsIterator: Iterator[Long] = extraIds.iterator
+  def topK(q: Array[Float], k: Int, accept: Long => Boolean): Seq[(Long, Double)] = {
+    // one k-heap over base and tail candidates: a row deleted and set
+    // again lives in both (the Set cleared its tombstone), and the heap
+    // keeps each id once, so the shard still answers k distinct ids
+    val h = new BoundedTopK.Heap(k)
+    base.topK(q, k, accept).foreach { case (id, c) => h.offer(id, c) }
+    var i = 0
+    while (i < extraIds.length) {
+      if (accept == null || accept(extraIds(i)))
+        h.offer(extraIds(i), RoutedAnnIndex.closenessOf(metric, q, extraVecs(i)))
+      i += 1
+    }
+    h.best.toSeq
+  }
+}
+
+/** Broadcastable id-membership filter for predicate-filtered ANN search —
+  * a Bloom sketch (bounded memory at any scale; the rare false positives
+  * are removed by exact post-verification at hydration). Accept sets small
+  * enough for an exact filter (≤ 4096) never reach the index at all: the
+  * dispatch brute-forces them, matching the reference's cutover. */
+sealed trait IdFilter extends Serializable { def accept(id: Long): Boolean }
+object IdFilter {
+  /** `expected` is the accept set's known cardinality (the count the
+    * Bloom filter was sized with — every composition site has it), −1 =
+    * unknown. It is what lets batch consumers AUTO-ROUTE on selectivity
+    * ([[RoutedAnnIndex.topKJoin]]'s sharp-filter cutover) instead of
+    * silently running a sparse accept set through a starved graph beam. */
+  @SerialVersionUID(1L)
+  final case class Bloom(bf: org.apache.spark.util.sketch.BloomFilter,
+      expected: Long = -1L) extends IdFilter {
+    def accept(id: Long): Boolean = bf.mightContainLong(id)
+  }
+}
 
 /**
- * Coarse-ROUTED sharded HNSW — the 100 TB read path for GetSimN-shaped
- * single-query search. The reference searches one HNSW graph on one node
- * (`ahnlich/similarity/src/hnsw/index.rs`); [[AnnIndex]] distributes that
- * as hash-sharded per-partition graphs, but hash shards are statistically
- * identical samples of the corpus, so EVERY query must fan out to EVERY
- * shard and per-query work grows linearly with shard count — fine at 16
- * shards, the open scale story at thousands.
+ * The sharded ANN index — the Spark-native reshaping of the reference's
+ * one in-memory HNSW or KD-tree per store
+ * (`ahnlich/similarity/src/hnsw/index.rs`, SURVEY.md §2.4): shards are a
+ * cached RDD, one searcher per partition, built with `mapPartitions`. Two
+ * parts vary, both picked by the index kind:
+ *  - the ROUTER. `hnsw_routed` routes by content: k-means centroids
+ *    trained by the same Lloyd loop as [[IvfIndex]]
+ *    ([[IvfIndex.trainCentroids]]) assign each row to the shard of its
+ *    nearest centroid (the IVF-HNSW composition of Jégou et al. 2011 §V /
+ *    FAISS's IVF-with-HNSW-cells). A query ranks the centroids on the
+ *    driver and searches only its `probes` nearest shards in one
+ *    partition-pruned job, so per-query work is probes/R of the all-shard
+ *    fan-out; probes = R is EXHAUSTIVE and equals the all-shard merge
+ *    (the oracle identity), smaller probes trades recall like IVF's nProbe
+ *    (ScaleRecall, SCALE.md). `hnsw` and `kdtree` route by content-id hash,
+ *    `pmod(id, numShards)`: hash shards are statistically identical
+ *    samples of the corpus, so every query probes every shard;
+ *  - the SEARCHER in each shard: an HNSW graph (`hnsw`, `hnsw_routed`) or
+ *    a KD-tree (`kdtree`).
+ * Rows insert in id order and the HNSW level RNG is seeded from the id, so
+ * a shard's structure is stable across runs (docs/specs/hnsw.md:1071-1093).
  *
- * This index closes it by borrowing IVF's routing layer (the IVF-HNSW
- * composition of Jégou et al. 2011 §V / FAISS's IVF-with-HNSW-cells):
- * shard assignment is CONTENT-based — k-means centroids trained by the
- * same Lloyd loop as [[IvfIndex]] ([[IvfIndex.trainCentroids]], one code
- * path), each row lives in the shard of its nearest centroid, one HNSW
- * graph per shard. A query ranks the R centroids on the driver (R is
- * small; same `sqEuclidean` routing as [[IvfIndex.probeCells]] — the
- * assignment geometry) and searches only the `probes` nearest shards via
- * a partition-pruned job: per-query work is probes/R of the all-shard
- * fan-out, independent of R. probes = R is EXHAUSTIVE and equals the
- * all-shard merge (the correctness identity the oracle gate pins);
- * smaller probes trades recall for scan fraction exactly like IVF's
- * nProbe — the recall curve at 200k × 64 shards is measured in
- * ScaleRecall and recorded in SCALE.md.
- *
- * Mutation story — LSM tiers against frozen routing centroids (the
+ * Mutation story — LSM tiers against a frozen router (the
  * memtable-beside-immutable-index pattern; the reference mutates its one
- * graph in place via back-links, `similarity/src/hnsw/index.rs`, which a
- * distributed frozen-shard layout can't do row-by-row):
+ * graph in place via back-links, which a distributed frozen-shard layout
+ * can't do row-by-row):
  *  - INSERTS [[append]]: new rows overlay their assigned shard as exact
  *    brute-force tails ([[PatchedShard]]) — work ∝ batch; past the
- *    patch-fraction guard the touched shards COMPACT locally (graph
- *    rebuild from own rows, no Lloyd, no shuffle); a drifted batch
- *    (assignment objective beyond the build baseline) refuses and the
- *    caller RECLUSTERS — the ScaleStaleness-derived trigger.
+ *    patch-fraction guard the touched shards COMPACT locally (rebuild
+ *    from own rows, no Lloyd, no shuffle); a drifted batch (assignment
+ *    objective beyond the build baseline — k-means routing only) refuses
+ *    and the caller RECLUSTERS — the ScaleStaleness-derived trigger.
  *  - DELETES [[delete]]: deleted ids join a TOMBSTONE set filtered out of
  *    every search/join/extraction (ids are content hashes, so a
  *    re-inserted id is the same vector — [[append]] clears its tombstone
- *    and any stale graph copy becomes valid again). Past the
- *    tombstone-fraction guard (or the absolute cap that bounds the
- *    filter's task-closure size) the shards that actually hold deleted
- *    rows compact locally — same no-Lloyd, no-shuffle rebuild as the
- *    insert side.
- *  - Only a centroid-invalidating event (drift guard, or a caller that
- *    can't name the touched ids) pays the full recluster.
+ *    and any stale copy becomes valid again). Past the tombstone-fraction
+ *    guard (or the absolute cap that bounds the filter's task-closure
+ *    size) the shards that actually hold deleted rows compact locally —
+ *    same no-Lloyd, no-shuffle rebuild as the insert side.
+ *  - Only a router-invalidating event (drift guard, or a caller that
+ *    can't name the touched ids) pays the full rebuild.
  */
 final class RoutedAnnIndex(
-    val centroids: Array[Array[Float]],
-    val config: NonLinearConfig.HNSWConfig,
+    val router: RoutedAnnIndex.Router,
+    /** The shard searcher: an [[NonLinearConfig.HNSWConfig]] graph or a
+      * [[NonLinearConfig.KDTreeConfig]] tree. */
+    val config: NonLinearConfig,
     val shards: RDD[AnnShard],
     val replicationEps: Double = 0.0,
     val iters: Int = 2,
@@ -125,10 +196,42 @@ final class RoutedAnnIndex(
       * provenance rule). Overlay tails stay float (exact, bounded by the
       * patch guard — the LSM memtable analog: memtables uncompressed,
       * SSTables compressed); they encode when compaction folds them into
-      * a graph. */
-    val storage: NodeStorage = NodeStorage.F32) extends Serializable {
+      * a graph. KD-tree shards always store f32. */
+    val storage: NodeStorage = NodeStorage.F32,
+    /** Append/compaction steps chained onto the shards' lineage since it
+      * was last cut ([[RoutedAnnIndex.materialize]]); 0 after a build or
+      * load. */
+    val lineageSteps: Int = 0) extends Serializable {
+  import RoutedAnnIndex.Router
 
-  def numShards: Int = centroids.length
+  def numShards: Int = router.numShards
+
+  def dim: Int = router.dim
+
+  /** The k-means routing centroids; the id-hash router has none. */
+  def centroids: Array[Array[Float]] = router match {
+    case Router.Centroids(c) => c
+    case r => throw GraftException(s"$r routes without centroids")
+  }
+
+  /** The metric shard scores rank by: the graph's, or the KD-tree's
+    * squared euclidean ([[Algorithm.KDTree]]). */
+  def metric: Algorithm = RoutedAnnIndex.metricOf(config)
+
+  /** Whether the searcher has an exact slice-scan arm ([[scanSearch]]):
+    * HNSW graphs do; a KD-tree's filtered search is already exact. */
+  def scannable: Boolean = config.isInstanceOf[NonLinearConfig.HNSWConfig]
+
+  /** This index with some maintenance state replaced. */
+  private def derive(shards: RDD[AnnShard] = shards,
+      patchedRows: Long = patchedRows, tombstones: Array[Long] = tombstones,
+      storedRows: Long = storedRowsIn,
+      recallCurves: Array[(Int, Array[(Int, Double, Double)])] = recallCurves,
+      workloadFp: String = workloadFp,
+      lineageSteps: Int = lineageSteps): RoutedAnnIndex =
+    new RoutedAnnIndex(router, config, shards, replicationEps, iters,
+      maxReplicas, meanAssignDist, patchedRows, tombstones, storedRows,
+      recallCurves, workloadFp, storage, lineageSteps)
 
   /** Any non-float node storage: shard scores are then approximate and
     * final ranking comes from the exact rescore. */
@@ -230,8 +333,8 @@ final class RoutedAnnIndex(
 
   import RoutedAnnIndex.Maintained
 
-  /** Append rows WITHOUT reclustering: assign to the FROZEN centroids
-    * (the training kernel), overlay each touched shard with an exact
+  /** Append rows WITHOUT reclustering: assign to the FROZEN router (the
+    * centroids' training kernel, or the id hash), overlay each touched shard with an exact
     * brute-force tail ([[PatchedShard]]) — work ∝ batch size, the old
     * index stays valid until the new one is materialized, and appended
     * rows are scored exactly (never an approximation downgrade).
@@ -241,10 +344,11 @@ final class RoutedAnnIndex(
     *
     * Guards, both derived from the measured ScaleStaleness curve
     * (SCALE.md):
-    *  - DRIFT: the batch's mean assignment distance exceeds
-    *    `driftLimit` × the build-time objective — distribution shift is
-    *    what decays frozen-centroid recall, so this returns None and the
-    *    caller RECLUSTERS (fresh Lloyd over everything);
+    *  - DRIFT (k-means routing only): the batch's mean assignment
+    *    distance exceeds `driftLimit` × the build-time objective —
+    *    distribution shift is what decays frozen-centroid recall, so this
+    *    returns None and the caller RECLUSTERS (fresh Lloyd over
+    *    everything);
     *  - PATCH FRACTION: overlay rows would exceed `patchLimit` of the
     *    pure GRAPH rows (stored rows minus existing tails). Volume alone
     *    costs no recall (the measured in-dist rows), so this COMPACTS
@@ -264,7 +368,6 @@ final class RoutedAnnIndex(
   def appendOutcome(dfIn: DataFrame,
       driftLimit: Double = RoutedAnnIndex.DefaultDriftLimit,
       patchLimit: Double = RoutedAnnIndex.DefaultPatchLimit): Option[Maintained] = {
-    import org.apache.spark.sql.graftbridge.{CentroidDists, ColumnBridge}
     // one row per id: a duplicated id in the batch would store twice in
     // an overlay tail (wasteful; the merges dedupe) but once in a
     // fresh-shard graph rebuild (insertPayload skips dupes), so the
@@ -272,13 +375,10 @@ final class RoutedAnnIndex(
     // up front and both branches agree with +nNew (review round 14)
     val df = dfIn.select(col("id").cast("long").as("id"), col("key"))
       .dropDuplicates("id")
-    val dists = ColumnBridge.column(CentroidDists(
-      ColumnBridge.expression(col("key")), centroids.flatten, numShards))
-    // one pass: per-row (nearest shard, min distance); agg gives the
+    // one pass: per-row (shard, distance to its centroid); agg gives the
     // batch objective and count, rows stay for the shard shuffle
-    val assigned = df.select(
-        IvfIndex.assignCell(col("key"), centroids).cast("int").as("_s"),
-        array_min(dists).as("_d"), col("id"), col("key"))
+    val (shardCol, distCol) = router.assign
+    val assigned = df.select(shardCol.as("_s"), distCol.as("_d"), col("id"), col("key"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // count, drift objective, the touched-shard set AND the cleared
@@ -335,10 +435,10 @@ final class RoutedAnnIndex(
         if (!compacting) Set.empty
         else shards.mapPartitionsWithIndex((i, it) =>
           it.collect { case _: PatchedShard => i }).collect().toSet
-      val metric = config.metric
+      val metric = this.metric
       val cfg = config
       val st = storage
-      val dim = centroids.head.length
+      val dim = this.dim
       val byShard = assigned
         .select(col("_s"), col("id"), col("key"))
         .rdd.map(r => (r.getInt(0), (r.getLong(1), r.getSeq[Float](2).toArray)))
@@ -352,41 +452,32 @@ final class RoutedAnnIndex(
           // rows rebuild in STORED form (VecPayload): existing quantized
           // nodes carry their codes verbatim — zero re-encode drift —
           // while the batch's float rows encode exactly once
-          def rebuilt(rows: Iterator[(Long, VecPayload)]): AnnShard = {
-            val idx = HnswIndex(dim, cfg, st)
-            rows.toArray.sortBy(_._1).foreach { case (id, p) =>
-              idx.insertPayload(id, p) }
-            new HnswShard(idx, cfg.efSearch)
-          }
+          val batch = extra.iterator.map { case (id, v) => (id, VecPayload.F32(v): VecPayload) }
           if (compacting) base match {
-            // tail-free shard with nothing to absorb: reuse the graph
+            // tail-free shard with nothing to absorb: reuse the searcher
             case Some(b) if extra.isEmpty && !b.isInstanceOf[PatchedShard] =>
               Iterator(b)
-            case _ =>
-              val all = base.map(RoutedAnnIndex.payloadsOf).getOrElse(Iterator.empty) ++
-                extra.iterator.map { case (id, v) => (id, VecPayload.F32(v)) }
-              if (all.isEmpty) Iterator.empty else Iterator(rebuilt(all))
+            case _ => RoutedAnnIndex.shardOf(dim, cfg, st,
+              base.map(RoutedAnnIndex.payloadsOf).getOrElse(Iterator.empty) ++ batch).iterator
           }
           else if (extra.isEmpty) base.iterator
           else base match {
             case Some(b) => Iterator(new PatchedShard(b, extra.map(_._1),
               extra.map(_._2), metric): AnnShard)
-            case None => Iterator(rebuilt( // first rows here
-              extra.iterator.map { case (id, v) => (id, VecPayload.F32(v)) }))
+            case None => RoutedAnnIndex.shardOf(dim, cfg, st, batch).iterator // first rows here
           }
       }.persist(StorageLevel.MEMORY_AND_DISK)
-      newShards.count() // materialize before releasing the predecessor
+      // materialize before releasing the predecessor
+      val chained = RoutedAnnIndex.materialize(newShards, lineageSteps)
       shards.unpersist(blocking = false)
       // compaction may shrink physical rows (a tailed duplicate of a graph
       // id folds to one node), so only that branch re-derives the count —
       // the metadata job is noise beside the rebuild it rides; the
       // steady-state overlay append carries +nNew for free
-      val next = new RoutedAnnIndex(centroids, config, newShards,
-        replicationEps, iters, maxReplicas, meanAssignDist,
+      val next = derive(newShards,
         if (compacting) 0L else patchedRows + nNew, newTombstones,
         if (compacting) RoutedAnnIndex.countStoredRows(newShards)
-        else storedRows + nNew,
-        recallCurves, workloadFp, storage)
+        else storedRows + nNew, lineageSteps = chained)
       Some(Maintained(next, if (compacting) "compact" else "append",
         if (compacting) touched ++ tailShards else touched))
     } finally assigned.unpersist(blocking = false)
@@ -425,10 +516,7 @@ final class RoutedAnnIndex(
     val total = storedRows
     if (merged.length <= maxTombstones &&
         (total == 0 || merged.length <= tombstoneLimit * total))
-      return Maintained(
-        new RoutedAnnIndex(centroids, config, shards, replicationEps, iters,
-          maxReplicas, meanAssignDist, patchedRows, merged, storedRows,
-          recallCurves, workloadFp, storage),
+      return Maintained(derive(tombstones = merged, storedRows = storedRows),
         "tombstone", Set.empty)
     org.slf4j.LoggerFactory.getLogger(getClass).info(
       s"RoutedAnnIndex.delete: ${merged.length} tombstones vs $total stored " +
@@ -450,37 +538,26 @@ final class RoutedAnnIndex(
     }.collect().toMap
     if (affected.isEmpty) // every id was already absent: drop the set
       return Maintained(
-        new RoutedAnnIndex(centroids, config, shards, replicationEps, iters,
-          maxReplicas, meanAssignDist, patchedRows, Array.emptyLongArray,
-          storedRows, recallCurves, workloadFp, storage),
+        derive(tombstones = Array.emptyLongArray, storedRows = storedRows),
         "tombstone", Set.empty)
     val cfg = config
     val st = storage
-    val dim = centroids.head.length
+    val dim = this.dim
     val hit = affected.keySet
     val newShards = shards.mapPartitionsWithIndex({ (i, it) =>
       if (!hit.contains(i)) it
-      else it.flatMap { s =>
-        // survivors rebuild in STORED form — quantized nodes keep their
-        // codes, no re-encode drift (the appendOutcome compaction rule)
-        val live = RoutedAnnIndex.payloadsOf(s)
-          .filter(r => Arrays.binarySearch(ts, r._1) < 0)
-          .toArray.sortBy(_._1)
-        if (live.isEmpty) Iterator.empty
-        else {
-          val idx = HnswIndex(dim, cfg, st)
-          live.foreach { case (id, p) => idx.insertPayload(id, p) }
-          Iterator(new HnswShard(idx, cfg.efSearch): AnnShard)
-        }
-      }
+      // survivors rebuild in STORED form — quantized nodes keep their
+      // codes, no re-encode drift (the appendOutcome compaction rule)
+      else it.flatMap(s => RoutedAnnIndex.shardOf(dim, cfg, st,
+        RoutedAnnIndex.payloadsOf(s).filter(r => Arrays.binarySearch(ts, r._1) < 0)))
     }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
-    newShards.count() // materialize before releasing the predecessor
+    // materialize before releasing the predecessor
+    val chained = RoutedAnnIndex.materialize(newShards, lineageSteps)
     shards.unpersist(blocking = false)
     Maintained(
-      new RoutedAnnIndex(centroids, config, newShards, replicationEps, iters,
-        maxReplicas, meanAssignDist,
-        math.max(0L, patchedRows - affected.values.sum), Array.emptyLongArray,
-        RoutedAnnIndex.countStoredRows(newShards), recallCurves, workloadFp, storage),
+      derive(newShards, math.max(0L, patchedRows - affected.values.sum),
+        Array.emptyLongArray, RoutedAnnIndex.countStoredRows(newShards),
+        lineageSteps = chained),
       "compact", hit)
   }
 
@@ -517,6 +594,16 @@ final class RoutedAnnIndex(
 
   def unpersist(): Unit = shards.unpersist(blocking = false)
 
+  /** A fresh index over an (id, key) frame with this index's router kind
+    * and build parameters: [[RoutedAnnIndex.buildHashed]] under the id
+    * hash, [[RoutedAnnIndex.build]] (new Lloyd rounds — a recluster) under
+    * centroids. */
+  def rebuild(df: DataFrame): RoutedAnnIndex = router match {
+    case _: Router.IdHash => RoutedAnnIndex.buildHashed(df, dim, config, numShards)
+    case _: Router.Centroids => RoutedAnnIndex.build(df, dim, config, numShards,
+      iters, replicationEps, maxReplicas, spec)
+  }
+
   /** Every LIVE stored (id, vector) row — graphs and overlay tails,
     * minus tombstones, deduped by id (boundary replication stores
     * copies). The extraction path for a full recluster that has no other
@@ -531,15 +618,13 @@ final class RoutedAnnIndex(
     live.reduceByKey((a, _) => a)
   }
 
-  /** The `probes` nearest shards for a query, by squared-Euclidean
-    * distance to the routing centroids (the k-means assignment geometry,
-    * ties toward the lower shard index — [[IvfIndex.probeCells]]'s rule). */
+  /** The shards a query probes ([[RoutedAnnIndex.Router.probe]]). */
   def probeShards(q: Array[Float], probes: Int): Seq[Int] =
-    TopKJoin.nearestCentroids(centroids, q, probes)
+    router.probe(q, probes)
 
   /** Merged top-k over the `probes` nearest shards only: one job on the
-    * pruned partition set (never a full fan-out), then the same bounded
-    * driver merge as [[AnnIndex.search]]. probes ≥ numShards ⇒ exhaustive.
+    * pruned partition set (never a full fan-out), then a bounded driver
+    * merge over shards × k candidates. probes ≥ numShards ⇒ exhaustive.
     * With boundary replication a row can surface from several probed
     * shards (identical closeness — same stored vector); the merge
     * dedupes by id so replicas never occupy two result slots. Tombstoned
@@ -591,9 +676,26 @@ final class RoutedAnnIndex(
     * The query vector and the accept state (tombstone tier + Bloom
     * sketch — megabytes for a sharp filter over a large store) ship as
     * broadcasts, once per executor instead of once per task, exactly as
-    * [[AnnIndex.search]] does (r16 advice #2). */
-  def scanSearch(q: Array[Float], k: Int, filter: IdFilter = null): Seq[(Long, Double)] =
-    RoutedAnnIndex.sliceScan(shards, config.metric, q, k, tombstones, filter)
+    * [[search]] does (r16 advice #2). HNSW graphs only ([[scannable]]). */
+  def scanSearch(q: Array[Float], k: Int, filter: IdFilter = null): Seq[(Long, Double)] = {
+    if (!scannable) throw GraftException(
+      "scanSearch is the HNSW slice-scan arm; a KD-tree's filtered search is already exact")
+    val sc = shards.sparkContext
+    val bq = sc.broadcast(q)
+    val bacc = sc.broadcast((tombstones, filter))
+    val metric = this.metric
+    val local = shards.mapPartitions { it =>
+      val (ts, f) = bacc.value
+      val accept = RoutedAnnIndex.composeAccept(ts, f)
+      val qv = bq.value
+      val h = new BoundedTopK.Heap(k)
+      it.foreach(shard => RoutedAnnIndex.acceptedRowsOf(shard, accept).foreach {
+        case (id, v) => h.offer(id, RoutedAnnIndex.closenessOf(metric, qv, v)) })
+      h.best.iterator
+    }.collect()
+    bq.destroy(); bacc.destroy()
+    RoutedAnnIndex.mergeById(local, k)
+  }
 
   /** Probes for a target recall, read off the PRIMARY (smallest-k)
     * measured curve: the SMALLEST calibrated probe count whose measured
@@ -736,7 +838,7 @@ final class RoutedAnnIndex(
       val fp = (if (queries.isDefined) "ext:" else "self:") +
         RoutedAnnIndex.sampleFingerprint(sample.map(_._2))
       val kmax = ks.max
-      val metric = config.metric
+      val metric = this.metric
       val ownIds: Array[Option[Long]] = sample.map(_._1)
       val bq = shards.sparkContext.broadcast(sample)
       // exact ground truth: per-partition bounded heaps (kmax entries per
@@ -793,9 +895,7 @@ final class RoutedAnnIndex(
           (p, mean, se)
         }.toArray)
       }.toArray
-      new RoutedAnnIndex(centroids, config, shards, replicationEps, iters,
-        maxReplicas, meanAssignDist, patchedRows, tombstones, storedRows,
-        curves, fp, storage)
+      derive(storedRows = storedRows, recallCurves = curves, workloadFp = fp)
     } finally {
       live.unpersist(blocking = false)
       exactCached.foreach(_.unpersist(blocking = false))
@@ -804,6 +904,127 @@ final class RoutedAnnIndex(
 }
 
 object RoutedAnnIndex {
+
+  /** How rows map to shards, and which shards a query probes. */
+  sealed trait Router extends Serializable {
+    def numShards: Int
+    def dim: Int
+    /** Each row's shard, and its squared distance to the centroid that
+      * placed it (0 under the id hash — no drift to measure), as columns
+      * over an (id, key) frame. */
+    def assign: (Column, Column)
+    /** The shards one query probes. */
+    def probe(q: Array[Float], probes: Int): Seq[Int]
+    /** [[probe]] per row, as an array<int> column over the query vector. */
+    def probeColumn(qv: Column, probes: Int): Column
+    /** The manifest fields naming this router ([[Router.fromManifest]]). */
+    private[ann] def manifest: List[(String, org.json4s.JValue)]
+  }
+  object Router {
+    import org.json4s._
+
+    /** k-means routing: a row lives in its nearest centroid's shard; a
+      * query probes its `probes` nearest shards (squared-euclidean to the
+      * centroids, ties toward the lower shard — [[IvfIndex.probeCells]]'s
+      * rule). */
+    final case class Centroids(centroids: Array[Array[Float]]) extends Router {
+      def numShards: Int = centroids.length
+      def dim: Int = centroids.head.length
+      def assign: (Column, Column) = {
+        import org.apache.spark.sql.graftbridge.{CentroidDists, ColumnBridge}
+        (IvfIndex.assignCell(col("key"), centroids).cast("int"),
+          array_min(ColumnBridge.column(CentroidDists(
+            ColumnBridge.expression(col("key")), centroids.flatten, numShards))))
+      }
+      def probe(q: Array[Float], probes: Int): Seq[Int] =
+        TopKJoin.nearestCentroids(centroids, q, probes)
+      def probeColumn(qv: Column, probes: Int): Column =
+        TopKJoin.nearestCentroids(centroids, qv, probes).getField("c")
+      private[ann] def manifest: List[(String, JValue)] = List(
+        "hashShards" -> JInt(0), "dim" -> JInt(dim),
+        "centroids" -> JArray(centroids.toList.map(c =>
+          JArray(c.toList.map(f => JInt(BigInt(java.lang.Float.floatToRawIntBits(f))))))))
+    }
+
+    /** Content-id hash routing: a row lives in shard `pmod(id, numShards)`.
+      * Hash shards are statistically identical samples of the corpus, so
+      * every query probes every shard. */
+    final case class IdHash(numShards: Int, dim: Int) extends Router {
+      def assign: (Column, Column) =
+        (pmod(col("id"), lit(numShards)).cast("int"), lit(0.0))
+      def probe(q: Array[Float], probes: Int): Seq[Int] = 0 until numShards
+      def probeColumn(qv: Column, probes: Int): Column =
+        sequence(lit(0), lit(numShards - 1))
+      private[ann] def manifest: List[(String, JValue)] = List(
+        "hashShards" -> JInt(numShards), "dim" -> JInt(dim),
+        "centroids" -> JArray(Nil))
+    }
+
+    /** The router a manifest's [[Router.manifest]] fields name; None when
+      * they are malformed or name none. */
+    private[ann] def fromManifest(j: JValue): Option[Router] =
+      ((j \ "hashShards"), (j \ "dim"), (j \ "centroids")) match {
+        case (JInt(n), JInt(d), _) if n > 0 => Some(IdHash(n.toInt, d.toInt))
+        case (_, _, JArray(cs)) if cs.nonEmpty =>
+          val centroids = cs.map {
+            case JArray(vs) => vs.map {
+              case JInt(b) => java.lang.Float.intBitsToFloat(b.toInt)
+              case _ => return None
+            }.toArray
+            case _ => return None
+          }.toArray
+          Some(Centroids(centroids))
+        case _ => None
+      }
+  }
+
+  /** The metric a shard searcher's scores rank by. */
+  private[graft] def metricOf(config: NonLinearConfig): Algorithm = config match {
+    case h: NonLinearConfig.HNSWConfig => h.metric
+    case _ => Algorithm.KDTree
+  }
+
+  /** One shard's searcher over `rows` (in any order): an HNSW graph with
+    * rows inserted id-ascending, or a KD-tree; None for no rows. Rows come
+    * in STORED form, so a rebuilt graph carries quantized codes verbatim
+    * (a KD-tree stores f32 only). */
+  private[ann] def shardOf(dim: Int, config: NonLinearConfig, storage: NodeStorage,
+      rows: Iterator[(Long, VecPayload)]): Option[AnnShard] = {
+    val sorted = rows.toArray.sortBy(_._1)
+    if (sorted.isEmpty) None
+    else Some(config match {
+      case h: NonLinearConfig.HNSWConfig =>
+        val idx = HnswIndex(dim, h, storage)
+        sorted.foreach { case (id, p) => idx.insertPayload(id, p) }
+        new HnswShard(idx, h.efSearch)
+      case _: NonLinearConfig.KDTreeConfig =>
+        val t = new KdTree(dim)
+        t.build(sorted.map(_._1), sorted.map(_._2.asInstanceOf[VecPayload.F32].v))
+        new KdShard(t)
+      case other => throw GraftException(s"${other.kind} is not a shard searcher")
+    })
+  }
+
+  /** Materialize a maintenance step's new shards; returns the steps now
+    * chained since the last lineage cut. Each append or compaction chains
+    * a narrow RDD onto its predecessor's shards and releases them: uncut,
+    * every search task would carry a partition chain as long as the
+    * mutation history, and a lost partition would recompute through
+    * released shards and source files the store may have garbage-collected
+    * since. Every [[GraftEngine.LineageCheckpointEvery]]-th chained step
+    * `localCheckpoint`s — the cadence of the engine's in-memory store
+    * frames, and no extra job (the count fills every block). Between cuts
+    * a released predecessor still recomputes through its lineage, so an
+    * old handle read after its successor's step keeps working unless it
+    * was itself a cut: the store frame's one-generation snapshot contract.
+    * The index is derived state — a lost executor rebuilds it from the
+    * store. */
+  private def materialize(shards: RDD[AnnShard], chained: Int): Int = {
+    val cut = chained + 1 >= GraftEngine.LineageCheckpointEvery
+    if (cut) shards.localCheckpoint()
+    shards.count()
+    if (cut) 0 else chained + 1
+  }
 
   /** What one maintenance call did: the new index handle, which LSM tier
     * absorbed the batch ("append" | "compact" | "tombstone"), and the
@@ -886,6 +1107,12 @@ object RoutedAnnIndex {
     * one-time rebuild. */
   val ShardLayoutVersion = 4
 
+  /** The manifest of the pre-unification hash-sharded `hnsw`/`kdtree`
+    * format (per-bucket source stamps, no layout version). A dir holding
+    * only this file is refused with a log line and rebuilt once; a full
+    * [[save]] deletes it. */
+  private val LegacyManifest = "manifest.json"
+
   /** CONTENT-ADDRESSED 64-bit fingerprint of a calibration query sample
     * (hex) — the workload identity carried beside persisted curves.
     * Per-vector content hashes are SORTED before the fold, so the
@@ -933,32 +1160,6 @@ object RoutedAnnIndex {
     }
   }
 
-  /** EXACT slice scan of every shard partition for one query (the
-    * single-query sharp-filter arm of both sharded families): each
-    * partition filters its stored rows through the accept function once
-    * — the id is tested BEFORE the vector materializes
-    * ([[acceptedRowsOf]]) — into one bounded k-heap. The query and the
-    * accept state (tombstones + filter) ship as broadcasts, once per
-    * executor. The driver merge dedupes replica ids. */
-  private[ann] def sliceScan(shards: RDD[AnnShard], metric: Algorithm,
-      q: Array[Float], k: Int, tombstones: Array[Long],
-      filter: IdFilter): Seq[(Long, Double)] = {
-    val sc = shards.sparkContext
-    val bq = sc.broadcast(q)
-    val bacc = sc.broadcast((tombstones, filter))
-    val local = shards.mapPartitions { it =>
-      val (ts, f) = bacc.value
-      val accept = composeAccept(ts, f)
-      val qv = bq.value
-      val h = new BoundedTopK.Heap(k)
-      it.foreach(shard => acceptedRowsOf(shard, accept).foreach { case (id, v) =>
-        h.offer(id, closenessOf(metric, qv, v)) })
-      h.best.iterator
-    }.collect()
-    bq.destroy(); bacc.destroy()
-    mergeById(local, k)
-  }
-
   /** Driver merge of per-shard (id, closeness) candidates: one entry per
     * id (boundary replicas surface from several shards with identical
     * closeness), best k by (closeness DESC, id ASC). */
@@ -974,23 +1175,18 @@ object RoutedAnnIndex {
   private[ann] def countStoredRows(shards: RDD[AnnShard]): Long = {
     def rows(s: AnnShard): Long = s match {
       case h: HnswShard => h.index.size.toLong
+      case k: KdShard => k.tree.size.toLong
       case p: PatchedShard => p.extraRows.toLong + rows(p.base)
-      case _ => 0L
     }
     shards.map(rows).sum().toLong
   }
 
-  /** Stored (id, vector) rows of a routed shard — graphs and overlay
-    * tails alike (the compaction extraction path). KD shards never occur
-    * in a routed index (the build only grows HNSW graphs). */
-  private[ann] def rowsOf(s: AnnShard): Iterator[(Long, Array[Float])] = s match {
-    case h: HnswShard => h.index.entries
-    case p: PatchedShard => rowsOf(p.base) ++ p.extraEntries
-    case other => throw new IllegalStateException(
-      s"routed shard of unexpected kind ${other.getClass.getSimpleName}")
-  }
+  /** Stored (id, vector) rows of a shard — searcher and overlay tails
+    * alike (the extraction path). */
+  private[ann] def rowsOf(s: AnnShard): Iterator[(Long, Array[Float])] =
+    acceptedRowsOf(s, null)
 
-  /** Stored rows of a routed shard surviving `accept`, id-tested BEFORE
+  /** Stored rows of a shard surviving `accept` (null = all), id-tested BEFORE
     * vector materialization (see [[HnswIndex.acceptedEntries]] — under
     * quantized storage an export is a decode, so the slice scan must not
     * decode the ~90% rejected rows). Overlay tails hold f32 arrays
@@ -999,13 +1195,13 @@ object RoutedAnnIndex {
   private[ann] def acceptedRowsOf(s: AnnShard,
       accept: Long => Boolean): Iterator[(Long, Array[Float])] = s match {
     case h: HnswShard => h.index.acceptedEntries(accept)
+    case k: KdShard =>
+      if (accept == null) k.tree.entries else k.tree.entries.filter(r => accept(r._1))
     case p: PatchedShard =>
       val tail =
         if (accept == null) p.extraEntries
         else p.extraEntries.filter { case (id, _) => accept(id) }
       acceptedRowsOf(p.base, accept) ++ tail
-    case other => throw new IllegalStateException(
-      s"routed shard of unexpected kind ${other.getClass.getSimpleName}")
   }
 
   /** Tombstone-aware accept composed with an optional caller filter,
@@ -1029,19 +1225,17 @@ object RoutedAnnIndex {
     * values every compaction. */
   private[ann] def payloadsOf(s: AnnShard): Iterator[(Long, VecPayload)] = s match {
     case h: HnswShard => h.index.entriesPayload
+    case k: KdShard => k.tree.entries.map { case (id, v) => (id, VecPayload.F32(v)) }
     case p: PatchedShard => payloadsOf(p.base) ++
       p.extraEntries.map { case (id, v) => (id, VecPayload.F32(v)) }
-    case other => throw new IllegalStateException(
-      s"routed shard of unexpected kind ${other.getClass.getSimpleName}")
   }
 
-  /** Stored content ids of a routed shard — graphs and tails, no vector
+  /** Stored content ids of a shard — searcher and tails, no vector
     * materialization (the membership-scan currency). */
   private[ann] def idsOf(s: AnnShard): Iterator[Long] = s match {
     case h: HnswShard => h.index.idsIterator
+    case k: KdShard => k.tree.idsIterator
     case p: PatchedShard => idsOf(p.base) ++ p.extraIdsIterator
-    case other => throw new IllegalStateException(
-      s"routed shard of unexpected kind ${other.getClass.getSimpleName}")
   }
 
   /** Rows living in overlay tails (all [[PatchedShard]] layers). */
@@ -1080,14 +1274,19 @@ object RoutedAnnIndex {
 
   // ------------------------------------------------------ artifact IO
   //
+  // Serialized shard structures next to the store (SURVEY §2.4's "binary
+  // files next to the table"; the reference snapshots its non-linear
+  // indexes inside the persistence image, ahnlich/utils/src/persistence.rs).
   // Same family policy as IvfIndex (routing layer tiny and driver-side,
   // shards serialized per partition), but LAYERED like the in-memory LSM
-  // tiers, so maintenance writes cost what the maintenance did:
+  // tiers, so maintenance writes cost what the maintenance did. One format
+  // for every index kind:
   //
-  //   <dir>/routed_manifest.json  # config identity, sourceStamp,
-  //                               # centroids as float INT BITS (exact),
-  //                               # tombstones, per-shard tail row counts
-  //   <dir>/s<i>.bin              # the shard's FROZEN graph (absent = empty)
+  //   <dir>/routed_manifest.json  # config identity, sourceStamp, layout
+  //                               # version, the router (centroids as
+  //                               # float INT BITS, or the hash shard
+  //                               # count), tombstones, per-shard tails
+  //   <dir>/s<i>.bin              # the shard's FROZEN searcher (absent = empty)
   //   <dir>/p<i>.bin              # its overlay tail rows (absent = none)
   //
   // A full [[save]] writes everything. An incremental save (touchedOnly)
@@ -1156,6 +1355,9 @@ object RoutedAnnIndex {
     }.collect().map { case (i, p, t) => i -> (p, t) }.toMap
     val state = (0 until index.numShards).map(i =>
       i -> written.getOrElse(i, previous.getOrElse(i, (false, 0L))))
+    // a full save supersedes a pre-unification hash-format manifest
+    if (touchedOnly.isEmpty)
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, LegacyManifest))
     // the PQ codebook is part of the storage identity — it rides beside
     // the manifest in the PqCodebook artifact form (a few KB; encode
     // after a load can never diverge from the build that wrote it)
@@ -1166,7 +1368,7 @@ object RoutedAnnIndex {
         OpqRotation.save(rot, dir, sourceStamp)
       case _ => ()
     }
-    val json = JObject(
+    val json = JObject(List[JField](
       "kind" -> JString("routed-hnsw"),
       "config" -> JString(index.config.toString),
       // serialized shard format version: a mismatch on load is an
@@ -1200,8 +1402,7 @@ object RoutedAnnIndex {
       "sourceStamp" -> JString(sourceStamp),
       "present" -> JArray(state.toList.map { case (_, (p, _)) => JBool(p) }),
       "tails" -> JArray(state.toList.map { case (_, (_, t)) => JInt(BigInt(t)) }),
-      "centroids" -> JArray(index.centroids.toList.map(c =>
-        JArray(c.toList.map(f => JInt(BigInt(java.lang.Float.floatToRawIntBits(f))))))))
+      ) ++ index.router.manifest) // centroids, or the id-hash shard count
     val target = java.nio.file.Paths.get(dir, "routed_manifest.json")
     val tmp = target.resolveSibling("routed_manifest.json.tmp")
     java.nio.file.Files.writeString(tmp, JsonMethods.pretty(JsonMethods.render(json)))
@@ -1239,7 +1440,7 @@ object RoutedAnnIndex {
     * caller rebuilds — on any mismatch or read failure (derived state,
     * never an error). */
   def load(spark: org.apache.spark.sql.SparkSession, dir: String,
-      config: NonLinearConfig.HNSWConfig, sourceStamp: String,
+      config: NonLinearConfig, sourceStamp: String,
       replicationEps: Double = 0.0, iters: Int = 2,
       maxReplicas: Int = 2,
       storage: StorageSpec = StorageSpec.F32): Option[RoutedAnnIndex] =
@@ -1247,7 +1448,14 @@ object RoutedAnnIndex {
       import org.json4s._
       import org.json4s.jackson.JsonMethods
       val p = java.nio.file.Paths.get(dir, "routed_manifest.json")
-      if (!java.nio.file.Files.exists(p)) return None
+      if (!java.nio.file.Files.exists(p)) {
+        if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir, LegacyManifest)))
+          org.slf4j.LoggerFactory.getLogger(getClass).info(
+            s"RoutedAnnIndex.load($dir): only a pre-unification hash-format " +
+              s"$LegacyManifest is present — refusing it; rebuilding once in " +
+              "the routed format (artifacts are derived state)")
+        return None
+      }
       val j = JsonMethods.parse(java.nio.file.Files.readString(p))
       if ((j \ "kind") != JString("routed-hnsw")) return None
       // layout gate BEFORE any shard .bin is touched: pre-version (or
@@ -1296,19 +1504,9 @@ object RoutedAnnIndex {
       if ((j \ "iters") != JInt(iters)) return None
       if ((j \ "maxReplicas") != JInt(maxReplicas)) return None
       if ((j \ "sourceStamp") != JString(sourceStamp)) return None
-      val centroids: Array[Array[Float]] = (j \ "centroids") match {
-        case JArray(cs) => cs.map {
-          case JArray(vs) => vs.map {
-            case JInt(b) => java.lang.Float.intBitsToFloat(b.toInt)
-            case _ => return None
-          }.toArray
-          case _ => return None
-        }.toArray
-        case _ => return None
-      }
-      if (centroids.isEmpty) return None
+      val router = Router.fromManifest(j).getOrElse(return None)
       val state = readShardState(dir).getOrElse(return None)
-      val parts = centroids.length
+      val parts = router.numShards
       if (state.size != parts) return None
       if (state.exists { case (i, (present, tails)) =>
           (present && !java.nio.file.Files.exists(
@@ -1316,7 +1514,7 @@ object RoutedAnnIndex {
           (tails > 0 && !java.nio.file.Files.exists(
             java.nio.file.Paths.get(dir, s"p$i.bin")))
         }) return None
-      val metric = config.metric
+      val metric = metricOf(config)
       val loaded = spark.sparkContext
         .parallelize(0 until parts, parts)
         .mapPartitionsWithIndex { (i, _) =>
@@ -1383,7 +1581,7 @@ object RoutedAnnIndex {
           }.toArray
           case _ => Array.empty // pre-calibration manifests load uncalibrated
         }
-      Some(new RoutedAnnIndex(centroids, config, loaded, replicationEps,
+      Some(new RoutedAnnIndex(router, config, loaded, replicationEps,
         iters, maxReplicas, meanDist, patched, tombstones, stored, curves,
         workloadFp, nodeStorage))
     } catch {
@@ -1397,20 +1595,38 @@ object RoutedAnnIndex {
     * artifact whose shard count differs from the requested build config
     * is stale ([[IvfIndex.buildOrLoad]]'s rule). */
   def buildOrLoad(dfIn: DataFrame, dim: Int,
-      config: NonLinearConfig.HNSWConfig, numShards: Int, dir: String,
+      config: NonLinearConfig, numShards: Int, dir: String,
       sourceStamp: String, iters: Int = 2, replicationEps: Double = 0.0,
       maxReplicas: Int = 2,
       storage: StorageSpec = StorageSpec.F32): RoutedAnnIndex =
-    load(dfIn.sparkSession, dir, config, sourceStamp, replicationEps,
-        iters, maxReplicas, storage)
+    loadOr(load(dfIn.sparkSession, dir, config, sourceStamp, replicationEps,
+        iters, maxReplicas, storage), dir, sourceStamp)(_.router match {
+        case Router.Centroids(c) => c.length == numShards
+        case _ => false
+      })(
+      build(dfIn, dim, config, numShards, iters, replicationEps, maxReplicas,
+        storage = storage))
+
+  /** [[buildOrLoad]] under the id-hash router: a fresh artifact restores
+    * whatever shard count it was built with. */
+  def buildHashedOrLoad(dfIn: DataFrame, dim: Int, config: NonLinearConfig,
+      numShards: Int, dir: String, sourceStamp: String): RoutedAnnIndex =
+    loadOr(load(dfIn.sparkSession, dir, config, sourceStamp), dir, sourceStamp)(
+      _.router.isInstanceOf[Router.IdHash])(
+      buildHashed(dfIn, dim, config, numShards))
+
+  /** `loaded` when it `fits`, else `build` and save it. */
+  private def loadOr(loaded: Option[RoutedAnnIndex], dir: String,
+      sourceStamp: String)(fits: RoutedAnnIndex => Boolean)(
+      build: => RoutedAnnIndex): RoutedAnnIndex =
+    loaded
       .filter { idx =>
-        val ok = idx.numShards == numShards
+        val ok = fits(idx)
         if (!ok) idx.unpersist()
         ok
       }
       .getOrElse {
-        val built = build(dfIn, dim, config, numShards, iters,
-          replicationEps, maxReplicas, storage = storage)
+        val built = build
         // best-effort: artifacts are derived state — an IO failure here
         // degrades the next restart to a rebuild, it never fails the
         // operation that built the index (GraftEngine's artifact policy)
@@ -1422,6 +1638,32 @@ object RoutedAnnIndex {
         }
         built
       }
+
+  /** Build under the id-hash router (`hnsw`, `kdtree`): row → shard
+    * `pmod(id, numShards)`, one searcher per shard over its rows in id
+    * order. No Lloyd round and no calibration; every query probes every
+    * shard. */
+  def buildHashed(dfIn: DataFrame, dim: Int, config: NonLinearConfig,
+      numShards: Int): RoutedAnnIndex = {
+    require(numShards > 0, s"numShards must be positive, got $numShards")
+    val router = Router.IdHash(numShards, dim)
+    val shards = shardRdd(dfIn.select(router.assign._1.as("_s"),
+      col("id").cast("long"), col("key")), numShards, dim, config, NodeStorage.F32)
+    // the k-means build parameters keep their defaults (artifact identity)
+    new RoutedAnnIndex(router, config, shards,
+      storedRowsIn = countStoredRows(shards))
+  }
+
+  /** (shard, id, key) rows → one cached searcher per shard partition. */
+  private def shardRdd(assigned: DataFrame, numShards: Int, dim: Int,
+      config: NonLinearConfig, storage: NodeStorage): RDD[AnnShard] =
+    assigned
+      .rdd.map(r => (r.getInt(0), (r.getLong(1), r.getSeq[Float](2).toArray)))
+      .partitionBy(new ShardPartitioner(numShards))
+      .mapPartitions(it => shardOf(dim, config, storage,
+        it.map { case (_, (id, v)) => (id, VecPayload.F32(v): VecPayload) }).iterator,
+        preservesPartitioning = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Build over an (id LONG, key ARRAY<FLOAT>) frame: train `numShards`
     * routing centroids (`iters` Lloyd rounds — the [[IvfIndex]] loop),
@@ -1440,7 +1682,7 @@ object RoutedAnnIndex {
     * unchanged and the merge dedupes by id. eps = 0 is exact
     * single-assignment (the [[IvfIndex.assignCell]] kernel, bit-identical
     * to the training geometry). */
-  def build(dfIn: DataFrame, dim: Int, config: NonLinearConfig.HNSWConfig,
+  def build(dfIn: DataFrame, dim: Int, config: NonLinearConfig,
       numShards: Int, iters: Int = 2, replicationEps: Double = 0.0,
       maxReplicas: Int = 2,
       storage: StorageSpec = StorageSpec.F32): RoutedAnnIndex =
@@ -1453,13 +1695,15 @@ object RoutedAnnIndex {
     * index's frozen centroids, and the recall decay of exactly that
     * configuration vs a full recluster is what [[graft.ScaleStaleness]]
     * measures to derive the recluster cadence. */
-  def build(dfIn: DataFrame, dim: Int, config: NonLinearConfig.HNSWConfig,
+  def build(dfIn: DataFrame, dim: Int, config: NonLinearConfig,
       numShards: Int, iters: Int, replicationEps: Double,
       maxReplicas: Int, storage: StorageSpec,
       frozenCentroids: Option[Array[Array[Float]]]): RoutedAnnIndex = {
     require(numShards > 0, s"numShards must be positive, got $numShards")
     require(replicationEps >= 0.0, s"replicationEps must be >= 0, got $replicationEps")
     require(maxReplicas >= 1, s"maxReplicas must be >= 1, got $maxReplicas")
+    require(storage == StorageSpec.F32 || config.isInstanceOf[NonLinearConfig.HNSWConfig],
+      s"${config.kind} shards store f32 only, got ${storage.key}")
     frozenCentroids.foreach(c => require(c.length == numShards,
       s"frozen centroid count ${c.length} != numShards $numShards"))
     val df = dfIn.select(col("id").cast("long").as("id"), col("key"))
@@ -1550,17 +1794,7 @@ object RoutedAnnIndex {
         df.select(explode(kept).as("_p"), col("id"), col("key"))
           .select(col("_p.c").cast("int").as("_s"), col("id"), col("key"))
       }
-    val shards = assigned
-      .rdd.map(r => (r.getInt(0), (r.getLong(1), r.getSeq[Float](2).toArray)))
-      .partitionBy(new ShardPartitioner(numShards))
-      .mapPartitions({ it =>
-        val rows = it.map(_._2).toArray.sortBy(_._1)
-        val idx = HnswIndex(dim, config, nodeStorage)
-        rows.foreach { case (id, v) => idx.insert(id, v) }
-        if (idx.size == 0) Iterator.empty
-        else Iterator(new HnswShard(idx, config.efSearch): AnnShard)
-      }, preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val shards = shardRdd(assigned, numShards, dim, config, nodeStorage)
     // one metadata pass both MATERIALIZES the persisted shards and counts
     // stored rows — the separate shards.count() job it replaces was pure
     // scheduler overhead (r18, guide §1.2: don't compute things twice)
@@ -1572,8 +1806,206 @@ object RoutedAnnIndex {
           f"$stored rows stored for $n input (${stored.toDouble / math.max(1, n)}%.3fx)")
     }
     df.unpersist(blocking = false)
-    new RoutedAnnIndex(centroids, config, shards, replicationEps, iters,
+    new RoutedAnnIndex(Router.Centroids(centroids), config, shards, replicationEps, iters,
       maxReplicas, meanDist, patchedRows = 0L,
       storedRowsIn = stored, storage = nodeStorage)
+  }
+}
+
+/** The non-linear arms of GetSimN's 4-way dispatch (store.rs:314-383). */
+object AnnSearch {
+
+  /** accept_list ≤ 4096 → exact brute force over the accepted set
+    * (hnsw/index.rs:24,233-235). */
+  val BruteForceCutover = 4096L
+
+  /** Where a predicate-filtered GetSimN runs, as a pure directly-testable
+    * function of the accept-set cardinality (AnnSearchSpec pins the
+    * three-way rule). */
+  sealed trait FilteredRoute
+  object FilteredRoute {
+    /** ≤ [[BruteForceCutover]]: exact brute force over the filtered STORE
+      * slice — the reference's absolute rule, kept as the floor. */
+    case object Exact extends FilteredRoute
+    /** ≤ [[RoutedAnnIndex.FilteredScanFraction]] of live rows: exact
+      * in-shard slice scan ([[RoutedAnnIndex.scanSearch]]) — in-memory
+      * stored rows, distances only on accepted ids. */
+    case object SliceScan extends FilteredRoute
+    /** Broad filters ride the graph beam (in-filtering; at corpus scale
+      * their slice is too large to scan per query). */
+    case object Graph extends FilteredRoute
+  }
+
+  /** The three-way dispatch rule (round-16, mirroring the batch join's
+    * round-15 auto-cutover into the single-query path): the reference's
+    * ABSOLUTE ≤4096 rule alone is scale-dishonest — at 100× scale a 5%
+    * predicate on a 20M-row store accepts ~1M ids, far above 4096, so it
+    * ran a starved graph beam (recall degrades as the accept set
+    * sparsifies — 0.96 at 1/2 selectivity vs 0.83 at 1/100, ScaleJoin)
+    * and, under a recall target, paid exhaustive probes. Between the
+    * absolute rule and [[RoutedAnnIndex.FilteredScanFraction]] of live
+    * rows, an exact in-shard slice scan wins on BOTH axes (measured,
+    * ScaleJoin filtered AUTO + the round-16 single-query selectivity
+    * table) — and meets ANY recall target, filter-geometry independent,
+    * EXACTLY under f32 node storage; under SQ8/PQ/OPQ the scan's
+    * shortlist is ranked on decoded quantized scores before the exact
+    * hydration rescore, so "exact" degrades to the storage's shortlist
+    * error (bounded by the rescoreSlack over-fetch — see
+    * [[RoutedAnnIndex.scanSearch]]). `scannable` = the searcher has a scan
+    * arm (HNSW graphs; a KD-tree's filtered search is already exact, so it
+    * never needs one). `liveRows` ≤ 0 (unknown) keeps the graph arm — the
+    * conservative direction. */
+  private[graft] def filteredRoute(cnt: Long, liveRows: Long,
+      scannable: Boolean): FilteredRoute =
+    if (cnt <= BruteForceCutover) FilteredRoute.Exact
+    else if (scannable && liveRows > 0 &&
+        cnt <= RoutedAnnIndex.FilteredScanFraction * liveRows)
+      FilteredRoute.SliceScan
+    else FilteredRoute.Graph
+
+  /** Probe count for one routed GetSimN — the recallTarget serving rule
+    * as a pure, directly-testable function (AnnSearchSpec pins it):
+    * no target → the raw `probes` knob; a target serves off the
+    * calibrated curves only on a measured operating point — an
+    * UNFILTERED request at n ≤ some calibrated k, answered by the
+    * tightest covering curve ([[RoutedAnnIndex.probesForN]]: the engine
+    * calibrates a k ladder, default {10, 50}, so an n ≤ 50 request
+    * serves PRUNED probes; recall@n at fixed probes falls as n grows,
+    * so a covering curve is a conservative floor). It widens to
+    * EXHAUSTIVE for n above every calibrated k, or for any predicate
+    * filter that reaches the graph arm (the curves are measured
+    * unfiltered; a sparse accept set starves the beam — the measured
+    * ScaleJoin selectivity degradation — and a filter CORRELATED with
+    * shard geometry breaks any selectivity-derated floor: the measured
+    * ScaleCalibrate filtered rejection). SHARP filters never get here —
+    * [[filteredRoute]] sends them to the slice scan, which meets any
+    * floor exactly under f32 storage (up to the rescore-slack-bounded
+    * shortlist error under quantized storage). Uncalibrated or 1.0 targets are exhaustive inside
+    * [[RoutedAnnIndex.probesForN]] already. */
+  private[graft] def effectiveProbes(cfg: NonLinearConfig.RoutedHNSWConfig,
+      idx: RoutedAnnIndex, n: Int, filtered: Boolean): Int =
+    cfg.recallTarget match {
+      case None => cfg.probes
+      case Some(t) =>
+        if (filtered) idx.numShards
+        else idx.probesForN(t, n)
+    }
+
+  /** Extra per-shard candidates fetched when filtering through a Bloom
+    * sketch, so a false positive can't displace a true top-n hit. */
+  val FalsePositiveSlack = 32
+
+  def getSimN(engine: GraftEngine, st: GraftEngine#StoreState,
+      q: Array[Float], n: Int, algorithm: Algorithm,
+      condition: Option[PredicateCondition]): DataFrame = {
+    // HNSW resolves to the id-hash index when one was created, else to
+    // the k-means-routed one ("hnsw_routed" extension kind) — so the
+    // reference-parity GetSimN call reaches the 100 TB read path the
+    // moment the store's index is the routed one, with no API change
+    val kind = algorithm match {
+      case Algorithm.KDTree => "kdtree"
+      case Algorithm.HNSW
+          if !st.meta.nonLinearIndexes.contains("hnsw") &&
+            st.meta.nonLinearIndexes.contains("hnsw_routed") => "hnsw_routed"
+      case Algorithm.HNSW   => "hnsw"
+      case other => throw GraftException(s"$other is not a non-linear algorithm")
+    }
+    // empty store: nothing to search — short-circuit AFTER the kind is
+    // known but BEFORE any lazy structure build (the routed builder's
+    // k-means needs >= 1 row; the result is empty either way). The
+    // index-not-found error still fires first for a store that never
+    // created one (config check inside ensureIndex below).
+    if (st.meta.nonLinearIndexes.contains(kind) && st.len == 0)
+      return emptyResult(engine)
+    // post-restart or post-invalidation the structure attaches lazily
+    // here, on the first query that needs it (GraftEngine.ensureIndex)
+    val (idx, cfg) = engine.ensureIndex(st.meta.name, kind, st.meta.schema)
+      .getOrElse(throw GraftException(
+        s"Non linear algorithm index $kind not found in store, create one"))
+    // a recall-targeted routed config reads probes off the calibrated
+    // curve (effectiveProbes); the id-hash router probes every shard.
+    // Quantized shards (sq8/pq) rank on stored-form scores: over-fetch
+    // the storage's rescore slack so the exact hydration rescore below
+    // restores the true final ranking (a quantization-flipped ordering
+    // inside the slack window never displaces a true top-n hit)
+    val slack = idx.storage.rescoreSlack
+    def search(q2: Array[Float], k2: Int, f: IdFilter): Seq[(Long, Double)] =
+      idx.search(q2, k2 + slack, cfg match {
+        case r: NonLinearConfig.RoutedHNSWConfig =>
+          effectiveProbes(r, idx, k2, filtered = f != null)
+        case _ => idx.numShards
+      }, f)
+
+    condition match {
+      case Some(cond) =>
+        val predCol = Predicates.toColumn(cond, col("value"))
+        // ids-only projection of the accept set, cached for the query: the
+        // count materializes it (the ONLY scan of the filtered store) and
+        // the Bloom build below reads the cache — 8 bytes/row, so the cache
+        // stays tiny even when the predicate accepts billions of rows
+        val acceptedIds = st.df.where(predCol).select("id")
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val cnt = acceptedIds.count()
+          if (cnt == 0) emptyResult(engine) // short-circuit store.rs:318-320
+          else filteredRoute(cnt, idx.liveLogicalRows, idx.scannable) match {
+            case FilteredRoute.Exact =>
+              engine.linearTopK(st.df.where(predCol), q, n, idx.metric)
+            case route =>
+              // above the absolute rule: broadcast Bloom sketch from the
+              // cached ids in one distributed aggregation (bounded driver
+              // memory at any scale — never a full id collect, tightly
+              // sized by cnt), then either scan the accepted slice exactly
+              // in-shard (sharp filters — meets any recall floor, no
+              // starved beam) or search the graphs with slack; either way
+              // hydration post-verifies the merged candidates against the
+              // exact predicate, so Bloom false positives never surface.
+              val bloom = acceptedIds.stat.bloomFilter("id", cnt, 0.001)
+              val f = IdFilter.Bloom(bloom, cnt)
+              val hits = route match {
+                case FilteredRoute.SliceScan =>
+                  org.slf4j.LoggerFactory.getLogger(getClass).info(
+                    s"AnnSearch: filter accepts $cnt of ~${idx.liveLogicalRows} " +
+                      s"live rows (<= ${RoutedAnnIndex.FilteredScanFraction}) — " +
+                      "scanning the accepted slice exactly instead of the " +
+                      "graph beam")
+                  idx.scanSearch(q, n + FalsePositiveSlack + slack, f)
+                case _ => search(q, n + FalsePositiveSlack, f)
+              }
+              hydrate(engine, st, hits, q, n, idx.metric, Some(cond))
+          }
+          // safe to release in all arms: the Bloom/empty results are already
+          // materialized, and the brute-force arm's lazy plan reads
+          // st.df.where(predCol), not the cached ids
+        } finally acceptedIds.unpersist(blocking = false)
+      case None =>
+        hydrate(engine, st, search(q, n, null), q, n, idx.metric, None)
+    }
+  }
+
+  /** ids → rows, recompute exact similarity on the tiny result set
+    * (store.rs:386-398 hydration). The predicate, when present, is re-applied
+    * exactly here so Bloom false positives never reach the result. The scan
+    * is bucket-pruned by the hit ids (engine.pointView), so hydration opens
+    * O(touched buckets) files, not the store. */
+  private def hydrate(engine: GraftEngine, st: GraftEngine#StoreState,
+      hits: Seq[(Long, Double)], q: Array[Float], n: Int,
+      scoringAlgo: Algorithm, condition: Option[PredicateCondition]): DataFrame = {
+    if (hits.isEmpty) return emptyResult(engine)
+    val ids = hits.map(_._1)
+    val base = engine.pointView(st.meta.name, ids, st.meta.schema)
+      .where(col("id").isin(ids: _*))
+    val verified = condition.fold(base)(c =>
+      base.where(Predicates.toColumn(c, col("value"))))
+    engine.linearTopK(verified, q, n, scoringAlgo)
+  }
+
+  private def emptyResult(engine: GraftEngine): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType(
+      StoreSchema.entrySchema.drop(1) :+
+        org.apache.spark.sql.types.StructField("similarity",
+          org.apache.spark.sql.types.FloatType))
+    engine.spark.createDataFrame(
+      engine.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 }

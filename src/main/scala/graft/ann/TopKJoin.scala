@@ -126,8 +126,9 @@ private[graft] object TopKJoin {
     * larger score = closer, that flow unsorted into the bounded fold. */
   sealed trait Source {
     def metric: Algorithm
-    /** The deduped query frame, shaped for this source's join. */
-    def queries(df: DataFrame, qId: String, qVec: String): DataFrame =
+    /** The deduped query frame, shaped for this source's join; `reread`
+      * when a rescore tail reads it a second time. */
+    def queries(df: DataFrame, qId: String, qVec: String, reread: Boolean): DataFrame =
       TopKJoin.queries(df, qId, qVec)
     /** Candidates for `depth` results per qid. */
     def candidates(q: DataFrame, depth: Int): DataFrame
@@ -138,16 +139,18 @@ private[graft] object TopKJoin {
   }
 
   /** Broadcast cross join — the one-cell case: the (small) query side is
-    * broadcast whole and the `(cid, cv)` corpus streams past it. The
-    * broadcast side lives on the driver anyway, so the deduped queries
-    * are collected there ONCE, by one single-task job (no shuffle): the
-    * coarse pass and the rescore broadcast the same local rows instead
-    * of each re-running the query plan. */
+    * broadcast whole and the `(cid, cv)` corpus streams past it. The dedup
+    * runs on one partition, so it plans no shuffle. Read once (no rescore
+    * tail), it stays in the plan and the broadcast itself collects it.
+    * Read twice, it is collected ONCE at call time by one single-task job,
+    * and the coarse pass and the rescore broadcast the same local rows
+    * instead of each re-running the query plan. */
   final case class Broadcast(corpus: DataFrame, scorer: Scorer) extends Source {
     def metric: Algorithm = scorer.metric
-    override def queries(df: DataFrame, qId: String, qVec: String): DataFrame = {
+    override def queries(df: DataFrame, qId: String, qVec: String,
+        reread: Boolean): DataFrame = {
       val q = TopKJoin.queries(df.coalesce(1), qId, qVec)
-      q.sparkSession.createDataFrame(q.collectAsList(), q.schema)
+      if (!reread) q else q.sparkSession.createDataFrame(q.collectAsList(), q.schema)
     }
     def candidates(q: DataFrame, depth: Int): DataFrame =
       broadcast(q.select(col("qid") +: scorer.query(col("qv")): _*))
@@ -177,9 +180,10 @@ private[graft] object TopKJoin {
   }
 
   /** Routed shard graphs: each query row ranks the routing centroids
-    * once, explodes to its `probes` nearest shards, and the query rows —
-    * the SMALL side — shuffle to the shard partitions where the graphs
-    * already live; per partition each query runs the shard's HNSW search.
+    * once, explodes to its `probes` nearest shards (every shard under the
+    * id-hash router), and the query rows — the SMALL side — shuffle to the
+    * shard partitions where the graphs already live; per partition each
+    * query runs the shard's search.
     * The corpus never moves. Scores are the graphs' stored form: the
     * negated [[VecStore]] distance (exact under f32, dequantized/decoded
     * under SQ8/PQ). `filter` composes with the tombstones inside every
@@ -190,9 +194,10 @@ private[graft] object TopKJoin {
     * of query vectors. */
   final case class Routed(index: RoutedAnnIndex, probes: Int,
       filter: IdFilter) extends Source {
-    def metric: Algorithm = index.config.metric
+    def metric: Algorithm = index.metric
 
-    override def queries(df: DataFrame, qId: String, qVec: String): DataFrame =
+    override def queries(df: DataFrame, qId: String, qVec: String,
+        reread: Boolean): DataFrame =
       TopKJoin.queries(df, qId, qVec)
         .select(col("qid"), col("qv").cast("array<float>").as("qv"))
 
@@ -214,10 +219,10 @@ private[graft] object TopKJoin {
 
     def candidates(q: DataFrame, depth: Int): DataFrame = {
       val p = if (scanSlice) index.numShards else probes
+      val probed = index.router.probeColumn(col("qv"), p)
       val byShard = q
-        .select(explode(nearestCentroids(index.centroids, col("qv"), p)).as("_p"),
-          col("qid"), col("qv"))
-        .select(col("_p.c").cast("int"), col("qid"), col("qv"))
+        .select(explode(probed).as("_s"), col("qid"), col("qv"))
+        .select(col("_s").cast("int"), col("qid"), col("qv"))
         .rdd.map(r => (r.getInt(0), (r.getLong(1), r.getSeq[Float](2).toArray)))
         .partitionBy(new RoutedAnnIndex.ShardPartitioner(index.numShards))
         .mapPartitions(it => Iterator.single(it.map(_._2).toArray),
@@ -255,9 +260,11 @@ private[graft] object TopKJoin {
     override def querySide(q: DataFrame): DataFrame = q
 
     /** The stored-form closeness of the euclidean metric is the NEGATED
-      * SQUARED distance; report the distance. */
+      * SQUARED distance; report the distance (the squared one for a
+      * KD-tree, as the reference does). */
     override def similarity(score: Column): Column = metric match {
       case Algorithm.EuclideanDistance => sqrt(-score)
+      case Algorithm.KDTree => -score
       case _ => score
     }
   }
@@ -286,7 +293,7 @@ private[graft] object TopKJoin {
     require(k > 0, s"k must be > 0, got $k")
     tail.foreach(t => require(t.shortlist >= k,
       s"shortlist (${t.shortlist}) must be >= k ($k)"))
-    val q = source.queries(queries, qId, qVec)
+    val q = source.queries(queries, qId, qVec, reread = tail.isDefined)
     val depth = tail.fold(k)(_.shortlist)
     val coarse = BoundedTopK.topK(source.candidates(q, depth),
       "qid", "cid", "score", depth)

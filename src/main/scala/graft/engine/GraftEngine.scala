@@ -48,17 +48,16 @@ class GraftEngine(val spark: SparkSession,
     * never run a count job. */
   final case class StoreState(meta: StoreMeta, df: DataFrame,
       len: Long = 0L,
-      annIndexes: Map[String, graft.ann.AnnIndex] = Map.empty,
+      // the BUILT ANN indexes by kind (⊆ meta.nonLinearIndexes): `hnsw`
+      // and `kdtree` route by id hash, `hnsw_routed` by k-means. Each
+      // maintains itself LSM-style through swap — inserts APPEND (exact
+      // overlay tails), deletes TOMBSTONE, guard trips compact locally;
+      // a mutation that can't name its rows (an unbounded DelPred past
+      // RoutedDeleteCap) or a drift-guard trip drops it for a lazy
+      // rebuild (ensureIndex)
+      indexes: Map[String, graft.ann.RoutedAnnIndex] = Map.empty,
       version: Long = 0L,
-      bucketPaths: Map[Int, String] = Map.empty,
-      // the coarse-ROUTED sharded HNSW ("hnsw_routed" extension kind) lives
-      // beside the hash-sharded annIndexes. Content routing can't align
-      // with the id-hash buckets, so instead of a bucket-aligned delta
-      // patch it maintains itself LSM-style through mutateStore: inserts
-      // APPEND (exact overlay tails), deletes TOMBSTONE, guard trips
-      // compact locally; only an unbounded DelPred (RoutedDeleteCap) or a
-      // drift-guard trip clears it whole for a lazy recluster
-      routedIndex: Option[graft.ann.RoutedAnnIndex] = None)
+      bucketPaths: Map[Int, String] = Map.empty)
 
   private val catalog = TrieMap[(String, String), StoreState]()
   val DefaultSchema = "public"
@@ -93,24 +92,6 @@ class GraftEngine(val spark: SparkSession,
 
   private def dropRecord(schema: String, name: String): Unit =
     persistRoot.foreach(Persistence.deleteStoreRecord(_, schema, name))
-
-  /** Persist one index's shard artifacts (see [[graft.ann.AnnIndex.save]]);
-    * `touched` = incremental save of just-patched shards. Best-effort:
-    * artifacts are derived state, so an IO failure here degrades the next
-    * restart to a rebuild — it never fails the operation that built the
-    * index. No-op without a persistRoot. */
-  private def saveIndexArtifacts(schema: String, name: String, kind: String,
-      idx: graft.ann.AnnIndex, paths: Map[Int, String],
-      touched: Option[Set[Int]] = None): Unit =
-    persistRoot.foreach { root =>
-      try graft.ann.AnnIndex.save(idx,
-        Persistence.indexDir(root, schema, name, kind), paths, touched)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"index artifact save failed for $schema.$name/$kind", e)
-      }
-    }
 
   /** Tables-as-truth INCREMENTAL write: store rows hash into
     * [[GraftEngine.NumBuckets]] buckets by content id; a mutation writes
@@ -195,45 +176,28 @@ class GraftEngine(val spark: SparkSession,
 
   // ------------------------------------------------- touched-bucket machinery
 
-  /** Which buckets a mutation touches, per modulus: the persistence layer's
-    * [[GraftEngine.NumBuckets]] and each live ANN index's shard count. All
-    * moduli are resolved in ONE distinct+collect job over the (small)
-    * touched-id frame — and NO job runs when the store is in-memory with no
-    * ANN index (nothing needs bucket math then). */
-  private final case class Touch(byModulus: Map[Int, Set[Int]]) {
-    def buckets: Set[Int] = byModulus.getOrElse(GraftEngine.NumBuckets, Set.empty)
-  }
+  /** The persistence buckets a mutation touches (`pmod(id, NumBuckets)`);
+    * empty for in-memory stores, which have no buckets to prune. */
+  private type Touch = Set[Int]
 
-  private def touchModuli(st: StoreState): Seq[Int] =
-    ((if (persistRoot.isDefined) Set(GraftEngine.NumBuckets) else Set.empty[Int]) ++
-      st.annIndexes.values.map(_.numShards)).toSeq.sorted
+  /** Driver-side touch resolution when the touched content ids are
+    * already in hand (DelKey probes, Upsert's two ids) — zero Spark jobs. */
+  private def touchOfIds(ids: Seq[Long]): Touch =
+    if (persistRoot.isEmpty) Set.empty
+    else ids.map(id => java.lang.Math.floorMod(id, GraftEngine.NumBuckets.toLong).toInt).toSet
 
-  /** Driver-side variant of the touch resolution when the touched content
-    * ids are already in hand
-    * (DelKey probes, Upsert's two ids) — zero Spark jobs. */
-  private def touchOfIds(st: StoreState, ids: Seq[Long]): Touch =
-    Touch(touchModuli(st).map(m =>
-      m -> ids.map(id => java.lang.Math.floorMod(id, m.toLong).toInt).toSet).toMap)
-
-  /** Touch resolution fused with the id count — ONE aggregation job resolves both
-    * the touched buckets (per modulus) and the distinct-batch size, instead
-    * of a count job followed by a distinct job (the grouped row count is
-    * bounded by the bucket-combination product, not the batch). */
-  private def touchAndCount(st: StoreState, ids: DataFrame): (Touch, Long) = {
-    val moduli = touchModuli(st)
-    if (moduli.isEmpty) (Touch(Map.empty), ids.count())
+  /** Touch resolution fused with the id count — ONE aggregation job resolves
+    * both the touched buckets and the distinct-batch size, instead of a
+    * count job followed by a distinct job (the grouped row count is
+    * bounded by the bucket count, not the batch). */
+  private def touchAndCount(ids: DataFrame): (Touch, Long) =
+    if (persistRoot.isEmpty) (Set.empty, ids.count())
     else {
-      val idCol = col(ids.columns.head)
-      val cols = moduli.map(m => pmod(idCol, lit(m)).cast("int").as(s"_m$m"))
-      val rows = ids.select(cols: _*)
-        .groupBy(moduli.map(m => col(s"_m$m")): _*)
-        .agg(count(lit(1)).as("_c")).collect()
-      val touch = Touch(moduli.zipWithIndex.map { case (m, i) =>
-        m -> rows.map(_.getInt(i)).toSet
-      }.toMap)
-      (touch, rows.map(_.getLong(moduli.length)).sum)
+      val rows = ids.select(pmod(col(ids.columns.head), lit(GraftEngine.NumBuckets))
+          .cast("int").as("_b"))
+        .groupBy("_b").agg(count(lit(1)).as("_c")).collect()
+      (rows.map(_.getInt(0)).toSet, rows.map(_.getLong(1)).sum)
     }
-  }
 
   /** The frame a mutation scans for its pre-write counts and rewrite: the
     * pruned parquet read of ONLY the touched buckets for persistent stores
@@ -242,7 +206,7 @@ class GraftEngine(val spark: SparkSession,
     persistRoot match {
       case Some(root) =>
         readBuckets(root, st.meta.schema, st.meta.name,
-          st.bucketPaths.view.filterKeys(touch.buckets).toMap)
+          st.bucketPaths.view.filterKeys(touch).toMap)
       case None => st.df
     }
 
@@ -253,8 +217,7 @@ class GraftEngine(val spark: SparkSession,
     * cached df. */
   private[graft] def pointView(name: String, ids: Seq[Long],
       schema: String = DefaultSchema): DataFrame = {
-    val st = state(schema, name)
-    mutationView(st, touchOfIds(st, ids))
+    mutationView(state(schema, name), touchOfIds(ids))
   }
 
   /** Swap in the result of a mutation. `rewrite` maps a source of existing
@@ -266,12 +229,13 @@ class GraftEngine(val spark: SparkSession,
     *
     * Persistent path: rewrite the touched buckets from a PRUNED parquet
     * read, write them, and root the new store df lazily in the new bucket
-    * set — per-mutation IO is proportional to the touched buckets. ANN
-    * indexes are delta-patched from the same pruned read.
+    * set — per-mutation IO is proportional to the touched buckets.
     *
     * In-memory path: rewrite the cached df, materialize, release the
     * predecessor; every [[GraftEngine.LineageCheckpointEvery]]-th version is
-    * local-checkpointed so plan depth stays bounded across mutation chains. */
+    * local-checkpointed so plan depth stays bounded across mutation chains.
+    *
+    * Built ANN indexes are maintained in their LSM tiers ([[maintain]]). */
   private def swap(schema: String, name: String, rewrite: DataFrame => DataFrame,
       touch: Touch,
       // by-name: the in-memory path derives the new length from its own
@@ -279,38 +243,33 @@ class GraftEngine(val spark: SparkSession,
       // lenDelta is itself a counting job (setCore's `updated` semi-join)
       // only pay that job on the persistent path (round-17, job-count cut)
       lenDelta: => Long,
-      // insert-only mutations pass the genuinely-new (id, key) rows so a
-      // live routed index can be APPENDED (overlay patch, work ∝ batch)
-      // instead of thrown away
-      routedAppend: Option[DataFrame] = None,
-      // delete-shaped mutations pass the removed content ids so a live
-      // routed index can TOMBSTONE them (work ≈ 0, compaction guarded)
-      // instead of being invalidated whole; None on BOTH means the
-      // mutation's effect on the index can't be named — invalidate, the
-      // next routed search reclusters lazily. Some(Nil) = "this mutation
-      // provably didn't change any indexed (id, vector) row — keep".
-      routedDelete: Option[Seq[Long]] = None): Option[Long] =
+      // insert-only mutations pass the genuinely-new (id, key) rows so the
+      // live indexes APPEND them (overlay tails, work ∝ batch) instead of
+      // being thrown away
+      indexAppend: Option[DataFrame] = None,
+      // delete-shaped mutations pass the removed content ids so the live
+      // indexes TOMBSTONE them (work ≈ 0, compaction guarded) instead of
+      // being invalidated whole; None on BOTH means the mutation's effect
+      // on the indexes can't be named — invalidate, the next search
+      // rebuilds lazily. Some(Nil) = "this mutation provably didn't change
+      // any indexed (id, vector) row — keep".
+      indexDelete: Option[Seq[Long]] = None): Option[Long] =
       storeLock(schema, name).synchronized {
     val st = state(schema, name)
     val newVersion = st.version + 1
     // newLen: known exactly (for free) on the in-memory path — the
     // materialization count IS the new store length; None for the
     // persistent path, whose write touches only the mutated buckets
-    val (cached, newPaths, patchSrc, newLenOpt):
-        (DataFrame, Map[Int, String], DataFrame, Option[Long]) =
+    val (cached, newPaths, newLenOpt): (DataFrame, Map[Int, String], Option[Long]) =
       persistRoot match {
         case Some(root) =>
-          val tb = touch.buckets
           val src =
-            readBuckets(root, schema, name, st.bucketPaths.view.filterKeys(tb).toMap)
+            readBuckets(root, schema, name, st.bucketPaths.view.filterKeys(touch).toMap)
           val (written, paths) =
-            writeBuckets(st, schema, name, rewrite(src), newVersion, tb)
+            writeBuckets(st, schema, name, rewrite(src), newVersion, touch)
           // lazy: the new df's lineage is the parquet just written — nothing
           // here re-reads (or recomputes through) the rest of the store
-          val c = written.persist(StorageLevel.MEMORY_AND_DISK)
-          val pSrc =
-            readBuckets(root, schema, name, paths.view.filterKeys(tb).toMap)
-          (c, paths, pSrc, None)
+          (written.persist(StorageLevel.MEMORY_AND_DISK), paths, None)
         case None =>
           val next = rewrite(st.df)
           val (c, n) =
@@ -337,105 +296,24 @@ class GraftEngine(val spark: SparkSession,
               val n = p.count() // materialize before releasing the predecessor
               (p, n)
             }
-          (c, Map.empty[Int, String], c, Some(n))
+          (c, Map.empty[Int, String], Some(n))
       }
-    // maintain only the ALREADY-BUILT indexes (annIndexes ⊆ meta
-    // .nonLinearIndexes); a config whose structure was never built — lazy
-    // post-restart attach, see ensureAnnIndex — stays unbuilt, so mutations
-    // on never-queried indexed stores don't pay an index build
-    val rebuiltWithTouch = st.annIndexes.map { case (kind, old) =>
-      val touchedShards = for {
-        shards <- touch.byModulus.get(old.numShards)
-        // pruned patch source is only complete when every shard's rows live
-        // in touched buckets, i.e. NumBuckets divides the shard modulus
-        if persistRoot.isEmpty || old.numShards % GraftEngine.NumBuckets == 0
-      } yield shards
-      touchedShards match {
-        case Some(shards) =>
-          kind -> (graft.ann.AnnIndex.patch(old, patchSrc, st.meta.dimension,
-            shards), Some(shards))
-        case None =>
-          kind -> (graft.ann.AnnIndex.build(
-            cached, st.meta.dimension, st.meta.nonLinearIndexes(kind)), None)
-      }
+    // index maintenance — BEFORE the predecessor df is released (the
+    // append's new-row frame reads the pre-mutation generation). Only the
+    // ALREADY-BUILT indexes are maintained; a config whose structure was
+    // never built (lazy attach, see ensureIndex) stays unbuilt, so
+    // mutations on never-queried indexed stores don't pay an index build
+    val maintained = st.indexes.flatMap { case (kind, old) =>
+      maintain(schema, name, kind, old, newVersion, indexAppend, indexDelete)
+        .map(kind -> _)
     }
-    val rebuilt = rebuiltWithTouch.map { case (k, (idx, _)) => k -> idx }
     // Releasing the predecessor here also drops its localCheckpoint blocks
     // (when the predecessor generation was checkpointed): a lazy DataFrame
     // handed out by getPred/getKey BEFORE this mutation must be consumed
     // before the next mutation, or it may fail instead of recomputing —
     // readers hold a snapshot CONTRACT per generation, not forever (the
     // reference's guard-held reads have the same one-generation scope).
-    // routed-index maintenance — BEFORE the predecessor df is released
-    // (the append's new-row frame reads the pre-mutation generation):
-    // content-routed shards can't be pruned by the mutation's touched
-    // id-hash buckets, so there is no delta patch — the LSM tiers stand
-    // in: removed ids TOMBSTONE (RoutedAnnIndex.delete — work ≈ 0,
-    // guard-routed local compaction), genuinely-new rows APPEND as exact
-    // overlay tails against the frozen centroids (RoutedAnnIndex
-    // .appendOutcome; ScaleStaleness pins that in-distribution appends
-    // cost zero recall). Only a drift-guard trip — or a mutation whose
-    // effect on the index can't be named (both args None) — invalidates
-    // whole; the next routed search reclusters lazily (ensureRoutedIndex),
-    // so mutations never pay an eager recluster.
-    val newRouted: Option[graft.ann.RoutedAnnIndex] =
-      st.routedIndex match {
-        case None => None
-        case Some(old) if routedAppend.isEmpty && routedDelete.isEmpty =>
-          old.unpersist(); None
-        case Some(old) =>
-          def tierEvent(tier: String): Unit =
-            graft.obs.Trace.event(spark, s"routed:$tier",
-              if (schema == DefaultSchema) name else s"$schema.$name")
-          // keep the on-disk routed artifact current under the NEW version
-          // stamp — ONE save of the swap's FINAL index (an artifact
-          // stamped vN must contain exactly the store's rows at vN, so
-          // intermediate states never persist; a guard-tripped append
-          // leaves the old stamp, which mismatches and rebuilds).
-          // Best-effort, like every artifact write. A tombstone-only
-          // delete rewrites the manifest alone, an overlay append only
-          // its touched shards' tail files; delete-compacted shards are
-          // forced through a graph rewrite even when a same-swap append
-          // overlaid them (their on-disk graph predates the compaction).
-          def refresh(idx: graft.ann.RoutedAnnIndex, touched: Set[Int],
-              forceGraph: Set[Int]): Unit =
-            persistRoot.foreach { root =>
-              try graft.ann.RoutedAnnIndex.save(idx,
-                Persistence.indexDir(root, schema, name, "hnsw_routed"),
-                s"$schema/$name@v$newVersion", Some(touched), forceGraph)
-              catch {
-                case scala.util.control.NonFatal(e) =>
-                  org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                    s"routed artifact refresh for $schema.$name failed", e)
-              }
-            }
-          val afterDel = routedDelete match {
-            case Some(ids) if ids.nonEmpty =>
-              val d = old.delete(ids)
-              tierEvent(s"delete-${d.tier}")
-              d
-            case _ => graft.ann.RoutedAnnIndex.Maintained(
-              old, "keep", Set.empty)
-          }
-          routedAppend match {
-            case Some(rows) => afterDel.index.appendOutcome(rows) match {
-              case Some(a) =>
-                tierEvent(a.tier)
-                refresh(a.index, afterDel.touchedShards ++ a.touchedShards,
-                  forceGraph = afterDel.touchedShards)
-                Some(a.index)
-              case None => // drift guard tripped -> recluster lazily
-                afterDel.index.unpersist()
-                tierEvent("recluster-pending")
-                None
-            }
-            case None =>
-              refresh(afterDel.index, afterDel.touchedShards, Set.empty)
-              Some(afterDel.index)
-          }
-      }
     st.df.unpersist(blocking = false)
-    st.annIndexes.values.foreach(_.unpersist())
     // ORDER PIN (ADVICE r17): `lenDelta` is lazy and, on the persistent
     // path, a counting job over the PREVIOUS version's bucket files (the
     // setCore `updated` semi-join) — it MUST be forced before
@@ -443,21 +321,75 @@ class GraftEngine(val spark: SparkSession,
     // catalog update, keeps that invariant explicit so a future reorder
     // of this tail cannot silently make the count read deleted files.
     val newLen = newLenOpt.getOrElse(st.len + lenDelta)
-    catalog((schema, name)) = st.copy(df = cached,
-      len = newLen,
-      annIndexes = rebuilt, version = newVersion, bucketPaths = newPaths,
-      routedIndex = newRouted)
+    catalog((schema, name)) = st.copy(df = cached, len = newLen,
+      indexes = maintained, version = newVersion, bucketPaths = newPaths)
     flushStore(schema, name)
-    // keep on-disk index artifacts current: patched indexes rewrite ONLY
-    // their touched shards (write cost rides the batch size, like the
-    // parquet write above); full rebuilds rewrite all shards
-    rebuiltWithTouch.foreach { case (kind, (idx, touched)) =>
-      saveIndexArtifacts(schema, name, kind, idx, newPaths, touched)
-    }
     // gcOldVersions runs strictly after `newLen` forced lenDelta above
     persistRoot.foreach(Persistence.gcOldVersions(_, schema, name,
       newPaths.values.map(_.split("/")(0)).toSet))
     newLenOpt
+  }
+
+  /** One built index through one mutation, in its LSM tiers: removed ids
+    * TOMBSTONE ([[graft.ann.RoutedAnnIndex.delete]] — work ≈ 0,
+    * guard-routed local compaction), genuinely-new rows APPEND as exact
+    * overlay tails against the frozen router
+    * ([[graft.ann.RoutedAnnIndex.appendOutcome]]; ScaleStaleness pins that
+    * in-distribution appends cost zero recall). None — the index is
+    * dropped and rebuilds lazily on its next search — after a drift-guard
+    * trip or a mutation whose effect on the index can't be named (both
+    * args None), so mutations never pay an eager rebuild. The on-disk
+    * artifact is refreshed under the NEW version stamp, once, from the
+    * final index (an artifact stamped vN must contain exactly the store's
+    * rows at vN; a dropped index leaves the old stamp, which mismatches
+    * and rebuilds). Best-effort, like every artifact write: a
+    * tombstone-only delete rewrites the manifest alone, an overlay append
+    * only its touched shards' tail files; delete-compacted shards are
+    * forced through a graph rewrite even when a same-swap append overlaid
+    * them (their on-disk graph predates the compaction). */
+  private def maintain(schema: String, name: String, kind: String,
+      old: graft.ann.RoutedAnnIndex, newVersion: Long,
+      append: Option[DataFrame],
+      delete: Option[Seq[Long]]): Option[graft.ann.RoutedAnnIndex] = {
+    def tierEvent(tier: String): Unit =
+      graft.obs.Trace.event(spark, s"routed:$tier",
+        if (schema == DefaultSchema) name else s"$schema.$name")
+    def refresh(idx: graft.ann.RoutedAnnIndex, touched: Set[Int],
+        forceGraph: Set[Int]): Unit =
+      persistRoot.foreach { root =>
+        try graft.ann.RoutedAnnIndex.save(idx,
+          Persistence.indexDir(root, schema, name, kind),
+          s"$schema/$name@v$newVersion", Some(touched), forceGraph)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"$kind artifact refresh for $schema.$name failed", e)
+        }
+      }
+    if (append.isEmpty && delete.isEmpty) { old.unpersist(); return None }
+    val afterDel = delete match {
+      case Some(ids) if ids.nonEmpty =>
+        val d = old.delete(ids)
+        tierEvent(s"delete-${d.tier}")
+        d
+      case _ => graft.ann.RoutedAnnIndex.Maintained(old, "keep", Set.empty)
+    }
+    append match {
+      case Some(rows) => afterDel.index.appendOutcome(rows) match {
+        case Some(a) =>
+          tierEvent(a.tier)
+          refresh(a.index, afterDel.touchedShards ++ a.touchedShards,
+            forceGraph = afterDel.touchedShards)
+          Some(a.index)
+        case None => // drift guard tripped -> recluster lazily
+          afterDel.index.unpersist()
+          tierEvent("recluster-pending")
+          None
+      }
+      case None =>
+        refresh(afterDel.index, afterDel.touchedShards, Set.empty)
+        Some(afterDel.index)
+    }
   }
 
   /** Engine-op span (graft.obs.Trace): one per public call, with Spark
@@ -521,8 +453,7 @@ class GraftEngine(val spark: SparkSession,
     storeLock(schema, name).synchronized { catalog.remove((schema, name)) } match {
       case Some(st) =>
         st.df.unpersist(blocking = false)
-        st.annIndexes.values.foreach(_.unpersist())
-        st.routedIndex.foreach(_.unpersist())
+        st.indexes.values.foreach(_.unpersist())
         dropRecord(schema, name)
         persistRoot.foreach { r =>
           Persistence.deleteDir(s"$r/data/$schema/$name")
@@ -543,8 +474,7 @@ class GraftEngine(val spark: SparkSession,
     keys.foreach { k =>
       storeLock(k._1, k._2).synchronized { catalog.remove(k) }.foreach { st =>
         st.df.unpersist(blocking = false)
-        st.annIndexes.values.foreach(_.unpersist())
-        st.routedIndex.foreach(_.unpersist())
+        st.indexes.values.foreach(_.unpersist())
       }
       dropRecord(k._1, k._2)
     }
@@ -562,8 +492,7 @@ class GraftEngine(val spark: SparkSession,
     catalog.keys.toSeq.foreach { k =>
       storeLock(k._1, k._2).synchronized { catalog.remove(k) }.foreach { st =>
         st.df.unpersist(blocking = false)
-        st.annIndexes.values.foreach(_.unpersist())
-        st.routedIndex.foreach(_.unpersist())
+        st.indexes.values.foreach(_.unpersist())
       }
       dropRecord(k._1, k._2)
     }
@@ -725,7 +654,6 @@ class GraftEngine(val spark: SparkSession,
         .persist(StorageLevel.MEMORY_AND_DISK)
       var staleCached: Option[DataFrame] = None
       try {
-        val moduli = touchModuli(st)
         // ONE job materializes the dedup cache AND resolves the validation
         // triple: an empty batch returns (0, 0) immediately — no version
         // bump, no empty version dir, no catalog flush, no no-op ANN patch —
@@ -763,16 +691,13 @@ class GraftEngine(val spark: SparkSession,
         // stale ids are store rows by contract, so their row count IS the
         // deleted count — no recount against the store needed
         val (touchBatch, batchDistinct) =
-          if (moduli.isEmpty) (Touch(Map.empty), v.getLong(2))
-          else touchAndCount(st, dedupedCached.select("id"))
+          if (persistRoot.isEmpty) (Set.empty[Int], v.getLong(2))
+          else touchAndCount(dedupedCached.select("id"))
         val (touch, deleted) = staleCached match {
           case None => (touchBatch, 0L)
           case Some(sc) =>
-            val (touchStale, nStale) = touchAndCount(st, sc)
-            (Touch((touchBatch.byModulus.keySet ++ touchStale.byModulus.keySet)
-              .map(m => m -> (touchBatch.byModulus.getOrElse(m, Set.empty[Int]) ++
-                touchStale.byModulus.getOrElse(m, Set.empty[Int]))).toMap),
-              nStale)
+            val (touchStale, nStale) = touchAndCount(sc)
+            (touchBatch ++ touchStale, nStale)
         }
         val batchIds = broadcast(dedupedCached.select(col("id").as("_nid")))
         def minusStale(df: DataFrame): DataFrame = staleCached match {
@@ -793,17 +718,17 @@ class GraftEngine(val spark: SparkSession,
           if (st.len == 0) 0L
           else minusStale(mutationView(st, touch))
             .join(batchIds, col("id") === col("_nid"), "left_semi").count()
-        // routed maintenance inputs. Plain Set is INSERT-ONLY from the
+        // index maintenance inputs. Plain Set is INSERT-ONLY from the
         // index's view: an "updated" row has the same content id = the
-        // same key VECTOR (only metadata changes — the graphs store
+        // same key VECTOR (only metadata changes — the shards store
         // (id, vector)), so the genuinely-new rows are the batch ids
         // absent from the (post-stale-delete) store. The fused
         // stale-delete path NAMES its removed ids, so it tombstones them
-        // (RoutedAnnIndex.delete) instead of invalidating the index
+        // (RoutedAnnIndex.delete) instead of invalidating the indexes
         // whole — as long as the stale set is small enough to collect
-        // (RoutedDeleteCap; past it a recluster amortizes anyway).
-        val (routedDelete, routedAppend) =
-          if (st.routedIndex.isEmpty) (None, None)
+        // (RoutedDeleteCap; past it a rebuild amortizes anyway).
+        val (indexDelete, indexAppend) =
+          if (st.indexes.isEmpty) (None, None)
           else {
             val delIds: Option[Seq[Long]] = staleCached match {
               case None => Some(Nil)
@@ -829,7 +754,7 @@ class GraftEngine(val spark: SparkSession,
             .join(batchIds, col("id") === col("_nid"), "left_anti")
             .union(deduped),
           touch, lenDelta = (batchDistinct - updatedCounted) - deleted,
-          routedAppend = routedAppend, routedDelete = routedDelete)
+          indexAppend = indexAppend, indexDelete = indexDelete)
         // in-memory path: updated derives from the materialized new length
         // (exact — see the identity above); persistent path: the semi-join
         // count already ran inside swap's lenDelta
@@ -920,12 +845,12 @@ class GraftEngine(val spark: SparkSession,
     keys.find(_.length != st.meta.dimension).foreach(k =>
       throw GraftErrors.dimensionMismatch(st.meta.dimension, k.length))
     val (pids, probe) = probeIds(keys)
-    val touch = touchOfIds(st, pids)
-    // the probe ids NAME the removed rows exactly (user-bounded), so a
-    // live routed index tombstones them instead of invalidating whole
+    val touch = touchOfIds(pids)
+    // the probe ids NAME the removed rows exactly (user-bounded), so the
+    // live indexes tombstone them instead of invalidating whole
     def runSwap(lenDelta: => Long): Option[Long] = swap(schema, name,
       src => src.join(broadcast(probe), col("id") === col("_pid"), "left_anti"),
-      touch, lenDelta = lenDelta, routedDelete = Some(pids))
+      touch, lenDelta = lenDelta, indexDelete = Some(pids))
     if (persistRoot.isDefined) {
       // persistent path: the pruned bucket rewrite must not run for a
       // no-op delete, so the semi-join count job decides first
@@ -940,7 +865,7 @@ class GraftEngine(val spark: SparkSession,
       // DelKey — every CDC micro-batch pays one) disappears. A delete of
       // only-absent keys still returns 0; it now bumps the version with a
       // no-op rewrite whose cost equals the count it replaced, and the
-      // routed tombstone tier already tolerates ids that are not in the
+      // index tombstone tier already tolerates ids that are not in the
       // store (a re-append clears them).
       val newLen = runSwap(sys.error(
         "lenDelta must not be evaluated on the in-memory swap path"))
@@ -957,36 +882,32 @@ class GraftEngine(val spark: SparkSession,
     storeLock(schema, name).synchronized {
     val st = state(schema, name)
     val c = Predicates.toColumn(cond, col("value"))
-    // r18 (guide §1.2): in-memory + unsharded + no routed index — nothing
-    // needs the matched-id frame (no buckets to prune, no ids to
-    // tombstone), so the match scan + touch job is dropped entirely and
-    // ONE swap job rewrites and counts; deleted = len − newLen. A no-match
-    // predicate then bumps the version with a no-op rewrite whose cost
-    // equals the scan it replaced (same acceptance as delKey's in-memory
-    // arm).
-    if (persistRoot.isEmpty && touchModuli(st).isEmpty && st.routedIndex.isEmpty) {
-      val newLen = swap(schema, name, src => src.where(!c), Touch(Map.empty),
+    // r18 (guide §1.2): in-memory + no built index — nothing needs the
+    // matched-id frame (no buckets to prune, no ids to tombstone), so the
+    // match scan + touch job is dropped entirely and ONE swap job
+    // rewrites and counts; deleted = len − newLen. A no-match predicate
+    // then bumps the version with a no-op rewrite whose cost equals the
+    // scan it replaced (same acceptance as delKey's in-memory arm).
+    if (persistRoot.isEmpty && st.indexes.isEmpty) {
+      val newLen = swap(schema, name, src => src.where(!c), Set.empty,
         lenDelta = sys.error(
-          "lenDelta must not be evaluated on the in-memory swap path"),
-        routedDelete = None) // no built routed index here (guard above);
-                             // None stays the conservative "invalidate"
+          "lenDelta must not be evaluated on the in-memory swap path"))
       st.len - newLen.getOrElse(st.len)
     } else {
     val matched = st.df.where(c).select("id").persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // one job resolves the deleted count AND the touched buckets (store
       // rows are unique by id, so the distinct-id count IS the row count)
-      val (touch, deleted) = touchAndCount(st, matched)
+      val (touch, deleted) = touchAndCount(matched)
       if (deleted > 0) {
-        // a bounded match set names its ids for the routed tombstone tier
+        // a bounded match set names its ids for the index tombstone tier
         // (one collect off the already-persisted id frame); past the cap
-        // the index invalidates whole — recluster amortizes at that scale
+        // the indexes invalidate whole — a rebuild amortizes at that scale
         val delIds =
-          if (st.routedIndex.isEmpty || deleted > routedDeleteCap)
-            None
+          if (st.indexes.isEmpty || deleted > routedDeleteCap) None
           else Some(matched.collect().map(_.getLong(0)).toSeq)
         swap(schema, name, src => src.where(!c), touch, lenDelta = -deleted,
-          routedDelete = delIds)
+          indexDelete = delIds)
       }
       deleted
     } finally matched.unpersist(blocking = false)
@@ -1035,14 +956,14 @@ class GraftEngine(val spark: SparkSession,
     // instead of a head() job against the 1-row frame
     val newId = org.apache.spark.sql.graftbridge.ColumnBridge.evalConstants(
       spark, Seq(keyId(typedlit(finalKey.toSeq)))).head.asInstanceOf[Long]
-    val touch = touchOfIds(st, Seq(oldId, newId))
+    val touch = touchOfIds(Seq(oldId, newId))
     // the new key may collide with a different existing entry (last-wins);
     // the collision probe scans only the new id's bucket
     val collided =
       if (newId == oldId) 0L
       else mutationView(st, touch).where(col("id") === lit(newId)).limit(1).count()
-    // routed maintenance: a metadata-only upsert (newId == oldId) keeps
-    // the index untouched (the indexed (id, vector) row didn't change); a
+    // index maintenance: a metadata-only upsert (newId == oldId) keeps
+    // the indexes untouched (the indexed (id, vector) row didn't change); a
     // key change tombstones the old id and overlays the new row — unless
     // the new key COLLIDED with an existing entry, whose (id, vector) is
     // already indexed (the collision only rewrote its metadata)
@@ -1052,8 +973,8 @@ class GraftEngine(val spark: SparkSession,
           col("id") === col("_nid"), "left_anti")
         .union(replacement),
       touch, lenDelta = -collided,
-      routedDelete = Some(if (newId == oldId) Nil else Seq(oldId)),
-      routedAppend =
+      indexDelete = Some(if (newId == oldId) Nil else Seq(oldId)),
+      indexAppend =
         if (newId == oldId || collided > 0) None
         else Some(replacement.select("id", "key")))
     (0L, 1L)
@@ -1155,28 +1076,18 @@ class GraftEngine(val spark: SparkSession,
       case _ => ()
     }
     val fresh = configs.filterNot(c => st.meta.nonLinearIndexes.contains(c.kind))
-    val (routedCfgs, hashCfgs) = fresh.partition(
-      _.isInstanceOf[NonLinearConfig.RoutedHNSWConfig])
-    val built = hashCfgs.map { c =>
-      c.kind -> graft.ann.AnnIndex.build(st.df, st.meta.dimension, c)
-    }.toMap
-    // an EMPTY store defers the routed build (k-means needs >= 1 row):
-    // the config is recorded now, the structure attaches lazily on the
-    // first routed search after data arrives (ensureRoutedIndex) — same
-    // lazy contract as the post-restart attach
-    val routedBuilt = routedCfgs.lastOption.collect {
-      case c: NonLinearConfig.RoutedHNSWConfig if st.len > 0 =>
-        buildRoutedIndex(st, c, schema, name)
-    }
+    val freshByKind = fresh.map(c => c.kind -> c).toMap
+    // an EMPTY store defers every build (k-means needs >= 1 row, and an
+    // empty searcher is pure overhead): the config is recorded now, the
+    // structure attaches lazily on the first search after data arrives
+    // (ensureIndex) — same lazy contract as the post-restart attach
+    val built =
+      if (st.len == 0) Map.empty[String, graft.ann.RoutedAnnIndex]
+      else freshByKind.map { case (kind, c) => kind -> buildIndex(st, c, schema, name) }
     catalog((schema, name)) = st.copy(
-      meta = st.meta.copy(nonLinearIndexes =
-        st.meta.nonLinearIndexes ++ fresh.map(c => c.kind -> c)),
-      annIndexes = st.annIndexes ++ built,
-      routedIndex = routedBuilt.orElse(st.routedIndex))
+      meta = st.meta.copy(nonLinearIndexes = st.meta.nonLinearIndexes ++ freshByKind),
+      indexes = st.indexes ++ built)
     flushStore(schema, name)
-    built.foreach { case (kind, idx) =>
-      saveIndexArtifacts(schema, name, kind, idx, st.bucketPaths)
-    }
     fresh.size
   }}
 
@@ -1189,61 +1100,82 @@ class GraftEngine(val spark: SparkSession,
     val present = kinds.intersect(st.meta.nonLinearIndexes.keySet)
     if (present.size != kinds.size && errorIfNotExists)
       throw GraftException(s"Non linear algorithm index not found in store")
-    present.foreach(k => st.annIndexes.get(k).foreach(_.unpersist()))
-    if (present.contains("hnsw_routed")) st.routedIndex.foreach(_.unpersist())
+    present.foreach(k => st.indexes.get(k).foreach(_.unpersist()))
     catalog((schema, name)) = st.copy(
       meta = st.meta.copy(nonLinearIndexes = st.meta.nonLinearIndexes -- present),
-      annIndexes = st.annIndexes -- present,
-      routedIndex =
-        if (present.contains("hnsw_routed")) None else st.routedIndex)
+      indexes = st.indexes -- present)
     flushStore(schema, name)
     persistRoot.foreach(root => present.foreach(k =>
       Persistence.deleteDir(Persistence.indexDir(root, schema, name, k))))
     present.size
   }}
 
+  /** The store's BUILT index of `kind`, if any (no attach). */
   private[graft] def annIndex(name: String, kind: String,
-      schema: String = DefaultSchema): Option[graft.ann.AnnIndex] =
-    state(schema, name).annIndexes.get(kind)
+      schema: String = DefaultSchema): Option[graft.ann.RoutedAnnIndex] =
+    state(schema, name).indexes.get(kind)
 
-  /** The store's ANN index of `kind`, attached on first use when only the
-    * CONFIG survived (post-[[GraftEngine.load]] attach): restart never pays
-    * index work for a store the session doesn't query. On first use the
-    * structure comes from the serialized shard artifacts when they are
-    * current ([[graft.ann.AnnIndex.load]] — deserialization, zero graph
-    * builds; shards whose bucket mutated since the save are delta-patched),
-    * falling back to a full build (which then writes fresh artifacts).
-    * None ⇔ no index of that kind was ever created. */
-  private[graft] def ensureAnnIndex(name: String, kind: String,
-      schema: String = DefaultSchema): Option[graft.ann.AnnIndex] = {
-    // lock-free fast path: once the structure is attached, reads must not
-    // queue behind long-running mutations (the line-58 contract); only the
-    // attach itself — a catalog read-modify-write — takes the lock
-    val fast = state(schema, name).annIndexes.get(kind)
-    if (fast.isDefined) return fast
-    storeLock(schema, name).synchronized {
-    val st = state(schema, name)
-    st.annIndexes.get(kind).orElse {
-      st.meta.nonLinearIndexes.get(kind).map { cfg =>
-        val restored = persistRoot.flatMap(root => graft.ann.AnnIndex.load(
-          spark, Persistence.indexDir(root, schema, name, kind), cfg,
-          st.bucketPaths, st.df, st.meta.dimension))
-        val built = restored.getOrElse {
-          val b = graft.ann.AnnIndex.build(st.df, st.meta.dimension, cfg)
-          saveIndexArtifacts(schema, name, kind, b, st.bucketPaths)
-          b
+  /** The store's index of `kind` and its config, attached on first use when
+    * only the CONFIG survived (post-[[GraftEngine.load]], post-invalidation,
+    * or created on an empty store): restart never pays index work for a
+    * store the session doesn't query, and a mutated store pays its rebuild
+    * on the first SEARCH, never on the mutation. On first use the
+    * structure comes from the serialized shard artifacts when their
+    * version stamp is current ([[graft.ann.RoutedAnnIndex.load]] —
+    * deserialization, zero graph builds), falling back to a full build
+    * (which then writes fresh artifacts). None ⇔ no index of that kind was
+    * ever created. */
+  private[graft] def ensureIndex(name: String, kind: String,
+      schema: String = DefaultSchema): Option[(graft.ann.RoutedAnnIndex, NonLinearConfig)] = {
+    val st0 = state(schema, name)
+    st0.meta.nonLinearIndexes.get(kind).map { cfg =>
+      // lock-free fast path: once the structure is attached, reads must not
+      // queue behind long-running mutations (the line-58 contract); only the
+      // attach itself — a catalog read-modify-write — takes the lock
+      st0.indexes.get(kind) match {
+        case Some(idx) => (idx, cfg)
+        case None => storeLock(schema, name).synchronized {
+          val st = state(schema, name)
+          val idx = st.indexes.getOrElse(kind, {
+            val built = buildIndex(st, cfg, schema, name)
+            catalog((schema, name)) = st.copy(indexes = st.indexes + (kind -> built))
+            built
+          })
+          (idx, cfg)
         }
-        catalog((schema, name)) = st.copy(annIndexes = st.annIndexes + (kind -> built))
-        built
       }
-    }
     }
   }
 
-  /** Build (or restore) the routed index for one store generation. The
-    * artifact source stamp is the store VERSION: any mutation bumps it, so
-    * a restart after mutations rebuilds instead of loading stale shards —
-    * the same all-or-nothing freshness rule as the routed manifest itself. */
+  /** [[ensureIndex]] for the routed kind, with its typed config. */
+  private[graft] def ensureRoutedIndex(name: String,
+      schema: String = DefaultSchema):
+      Option[(graft.ann.RoutedAnnIndex, NonLinearConfig.RoutedHNSWConfig)] =
+    ensureIndex(name, "hnsw_routed", schema).collect {
+      case (idx, c: NonLinearConfig.RoutedHNSWConfig) => (idx, c)
+    }
+
+  /** Build (or restore) the index of one config for one store generation.
+    * The artifact source stamp is the store VERSION: any mutation bumps it,
+    * so a restart after unrecorded mutations rebuilds instead of loading
+    * stale shards. `hnsw` and `kdtree` route by id hash over
+    * [[GraftEngine.hashShards]] shards; `hnsw_routed` trains k-means. */
+  private def buildIndex(st: StoreState, cfg: NonLinearConfig, schema: String,
+      name: String): graft.ann.RoutedAnnIndex = cfg match {
+    case r: NonLinearConfig.RoutedHNSWConfig => buildRoutedIndex(st, r, schema, name)
+    case c =>
+      val src = st.df.select(col("id"), col("key"))
+      val shards = GraftEngine.hashShards(spark)
+      persistRoot match {
+        case Some(root) => graft.ann.RoutedAnnIndex.buildHashedOrLoad(src,
+          st.meta.dimension, c, shards, Persistence.indexDir(root, schema, name, c.kind),
+          s"$schema/$name@v${st.version}")
+        case None =>
+          graft.ann.RoutedAnnIndex.buildHashed(src, st.meta.dimension, c, shards)
+      }
+  }
+
+  /** The k-means-routed arm of [[buildIndex]], with its calibration. */
   private def buildRoutedIndex(st: StoreState,
       cfg: NonLinearConfig.RoutedHNSWConfig, schema: String,
       name: String): graft.ann.RoutedAnnIndex = {
@@ -1310,34 +1242,6 @@ class GraftEngine(val spark: SparkSession,
     }
   }
 
-  /** The store's routed index, attached on first use when only the config
-    * survived (post-restart or post-mutation): same lazy contract as
-    * [[ensureAnnIndex]] — a mutated or restored routed store pays the
-    * recluster on its first routed SEARCH, never on the mutation. */
-  private[graft] def ensureRoutedIndex(name: String,
-      schema: String = DefaultSchema):
-      Option[(graft.ann.RoutedAnnIndex, NonLinearConfig.RoutedHNSWConfig)] = {
-    val st0 = state(schema, name)
-    val cfg0 = st0.meta.nonLinearIndexes.get("hnsw_routed")
-      .collect { case c: NonLinearConfig.RoutedHNSWConfig => c }
-    cfg0 match {
-      case None => None
-      case Some(cfg) =>
-        st0.routedIndex match {
-          case Some(idx) => Some((idx, cfg)) // lock-free fast path
-          case None => storeLock(schema, name).synchronized {
-            val st = state(schema, name)
-            val idx = st.routedIndex.getOrElse {
-              val built = buildRoutedIndex(st, cfg, schema, name)
-              catalog((schema, name)) = st.copy(routedIndex = Some(built))
-              built
-            }
-            Some((idx, cfg))
-          }
-        }
-    }
-  }
-
   /** Session's routed-delete cap — [[GraftEngine.RoutedDeleteCap]] unless
     * `spark.graft.routedDeleteCap` overrides it (testability + a
     * deployment lever for driver-memory-constrained sessions). A
@@ -1390,10 +1294,17 @@ object GraftEngine {
   /** Hash buckets per persisted store: id → pmod(id, NumBuckets) names the
     * file group a row lives in, so mutations read AND write only touched
     * groups. Sized for the test scale; a cluster deployment sizes this with
-    * the table (buckets ≈ store bytes / target file size). ANN shard counts
-    * are rounded to a multiple of this, so a touched bucket set always
-    * covers its touched shards' rows. */
+    * the table (buckets ≈ store bytes / target file size). */
   val NumBuckets = 16
+
+  /** Shard count of a fresh `hnsw`/`kdtree` (id-hash) index: the session's
+    * shuffle partitions rounded up to a multiple of [[NumBuckets]], at
+    * least NumBuckets — the shard count these kinds have always had, so
+    * an unmutated graph is bit-identical across releases. */
+  def hashShards(spark: SparkSession): Int = {
+    val raw = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    math.max(NumBuckets, (raw + NumBuckets - 1) / NumBuckets * NumBuckets)
+  }
 
   /** In-memory stores localCheckpoint every K-th mutation so the logical
     * plan doesn't chain across unbounded anti-join/union rewrites.
@@ -1409,10 +1320,10 @@ object GraftEngine {
   val InMemRowsPerPartition = 65536L
 
   /** Delete-shaped mutations that remove at most this many rows collect
-    * the removed content ids and route them to the routed index's
+    * the removed content ids and route them to the built indexes'
     * tombstone tier ([[graft.ann.RoutedAnnIndex.delete]] — work ≈ 0,
-    * guarded local compaction). Above it the index invalidates whole: the
-    * driver-side id collect stays bounded, and a recluster amortizes over
+    * guarded local compaction). Above it the indexes invalidate whole: the
+    * driver-side id collect stays bounded, and a rebuild amortizes over
     * a delete of that size anyway. Overridable per session via
     * `spark.graft.routedDeleteCap` (specs exercise the past-cap
     * whole-invalidate path without building 65k-row fixtures; the
@@ -1424,7 +1335,7 @@ object GraftEngine {
     * each store's current bucket set LAZILY. Non-linear indexes are derived
     * state (rebuilding from columnar data beats deserializing per-partition
     * graphs at scale) — but they are NOT rebuilt here: only their configs
-    * attach, and [[GraftEngine.ensureAnnIndex]] builds the structure on the
+    * attach, and [[GraftEngine.ensureIndex]] builds the structure on the
     * first non-linear GetSimN that needs it. Restart cost is O(catalog
     * files), zero Spark jobs — not O(sum of all indexed stores), which at
     * 100 TB would be hours of rebuild for stores the session may never

@@ -66,8 +66,10 @@ object Persistence {
       versionDir: String, bucket: Int): String =
     s"$root/data/$schema/$name/$versionDir/b$bucket"
 
-  /** Serialized ANN shard artifacts for one (store, index-kind) — see
-    * [[graft.ann.AnnIndex.save]]. Derived state: safe to delete anytime. */
+  /** Serialized ANN shard artifacts for one (store, index-kind), in the
+    * one routed manifest format of every kind — see
+    * [[graft.ann.RoutedAnnIndex.save]]. Derived state: safe to delete
+    * anytime. */
   def indexDir(root: String, schema: String, name: String, kind: String): String =
     s"$root/index/$schema/$name/$kind"
 

@@ -1008,7 +1008,7 @@ object Queries {
     // ---- Filtered ANN above the brute-force cutover: the accept set
     // (~2/3 of lineitem) is ≫ 4096, so GetSimN(KDTree) takes the Bloom-
     // sketch arm (distributed aggregation → broadcast → in-filter → exact
-    // predicate re-verify at hydration; AnnIndex.scala) — and must still
+    // predicate re-verify at hydration; AnnSearch in RoutedAnnIndex.scala) — and must still
     // match the exact oracle. ----
     "vdb_sim_kdtree_filtered_large" -> Q(
       (s, dir) => {

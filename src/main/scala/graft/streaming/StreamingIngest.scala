@@ -45,8 +45,8 @@ object StreamingIngest {
     * equal-sequence ties), then net deletes go through
     * [[GraftEngine.delKey]] and net inserts through [[GraftEngine.set]] —
     * so every downstream maintenance path (bucket-incremental parquet,
-    * predicate indexes, hash-sharded delta patches, the routed index's
-    * tombstone/append tiers) composes exactly as in batch, and the final
+    * predicate indexes, the ANN indexes' tombstone/append tiers)
+    * composes exactly as in batch, and the final
     * store equals applying the net mutations directly (pinned in
     * StreamingSpec; oracle-gated by `vdb_cdc_stream`).
     *
@@ -125,8 +125,8 @@ object StreamingIngest {
     * swap — while net deletes go through [[graft.ai.AiEngine.delKey]]
     * (delete by raw input via the reserved key). Downstream, everything
     * composes exactly as in batch: bucket-incremental parquet, predicate
-    * indexes, hash-sharded delta patches, the routed index's
-    * tombstone/append tiers (the crawl-shaped production pipeline:
+    * indexes, the ANN indexes' tombstone/append tiers (the crawl-shaped
+    * production pipeline:
     * Debezium log of a document table in front, vector store maintenance
     * behind, zero hand-written glue).
     *
@@ -556,7 +556,10 @@ object StreamingIngest {
     * ([[streamingRoutedAppend]]): `current` is always a complete,
     * searchable index (readers never see a half-applied batch — each
     * micro-batch's append materializes before the reference swings), and
-    * the maintenance counters say which LSM tier each batch took.
+    * the maintenance counters say which LSM tier each batch took. A
+    * RECLUSTER is [[graft.ann.RoutedAnnIndex.rebuild]]: the index keeps
+    * its router kind, so an id-hash handle (`hnsw`, `kdtree`) rebuilds
+    * id-hash and only a k-means handle runs new Lloyd rounds.
     *
     * SQ8 handles (a quantized initial index): appends/compactions/
     * deletes carry codes losslessly ([[graft.ann.VecPayload]]), but a
@@ -594,10 +597,7 @@ object StreamingIngest {
           val all = old.rows.toDF("id", "key")
             .select(col("id"), col("key").cast("array<float>").as("key"))
             .union(batch.select(col("id").cast("long"), col("key")))
-          val rebuilt = graft.ann.RoutedAnnIndex.build(all,
-            old.centroids.head.length, old.config, old.numShards, old.iters,
-            old.replicationEps, old.maxReplicas, old.spec)
-          idx = rebuilt
+          idx = old.rebuild(all)
           old.unpersist()
           nReclusters += 1
           graft.obs.Trace.event(spark, "routed:recluster", "stream-ingest")
@@ -659,10 +659,7 @@ object StreamingIngest {
             .select(col("id"), col("key").cast("array<float>").as("key"))
             .union(last.where(col("op") === "insert")
               .select(col("id").cast("long"), col("key").cast("array<float>")))
-          val rebuilt = graft.ann.RoutedAnnIndex.build(net,
-            old.centroids.head.length, old.config, old.numShards, old.iters,
-            old.replicationEps, old.maxReplicas, old.spec)
-          idx = rebuilt
+          idx = old.rebuild(net)
           old.unpersist()
           nReclusters += 1
           graft.obs.Trace.event(spark, "routed:recluster", "stream-ingest")
@@ -690,11 +687,7 @@ object StreamingIngest {
             val all = afterDel.rows.toDF("id", "key")
               .select(col("id"), col("key").cast("array<float>").as("key"))
               .union(inserts)
-            val rebuilt = graft.ann.RoutedAnnIndex.build(all,
-              afterDel.centroids.head.length, afterDel.config,
-              afterDel.numShards, afterDel.iters, afterDel.replicationEps,
-              afterDel.maxReplicas, afterDel.spec)
-            idx = rebuilt
+            idx = afterDel.rebuild(all)
             afterDel.unpersist()
             nReclusters += 1
             graft.obs.Trace.event(spark, "routed:recluster", "stream-ingest")

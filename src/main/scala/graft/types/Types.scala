@@ -91,17 +91,19 @@ object NonLinearConfig {
       extendCandidates: Boolean = false,
       keepPrunedConnections: Boolean = false) extends NonLinearConfig { def kind = "hnsw" }
 
-  /** EXTENSION (no reference analog): coarse-ROUTED sharded HNSW — the
-    * 100 TB read path ([[graft.ann.RoutedAnnIndex]]). k-means routing
-    * centroids assign rows to content-based shards, one HNSW graph per
-    * shard; a query searches only the `probes` nearest shards, so
-    * per-query work scales with `probes`, not shard count. probes >=
-    * numShards is exhaustive (identical result set to one hash-sharded
-    * HNSW fan-out); smaller probes trades recall exactly like IVF nProbe.
-    * Mutations are absorbed LSM-style (exact overlay tails on insert,
-    * tombstones on delete, guard-routed local compaction — see
-    * [[graft.ann.RoutedAnnIndex]]); only a drift-guard trip or an
-    * unbounded DelPred invalidates whole and reclusters lazily.
+  /** EXTENSION (no reference analog): the k-means router of the one
+    * sharded index family ([[graft.ann.RoutedAnnIndex]], the 100 TB read
+    * path; `hnsw` and `kdtree` are the same index under the id-hash
+    * router). k-means routing centroids assign rows to content-based
+    * shards, one HNSW graph per shard; a query searches only the `probes`
+    * nearest shards, so per-query work scales with `probes`, not shard
+    * count. probes >= numShards is exhaustive (identical result set to the
+    * `hnsw` kind's all-shard fan-out); smaller probes trades recall
+    * exactly like IVF nProbe. Mutations are absorbed LSM-style, as for
+    * every kind (exact overlay tails on insert, tombstones on delete,
+    * guard-routed local compaction — see [[graft.ann.RoutedAnnIndex]]);
+    * only a drift-guard trip or an unbounded DelPred invalidates whole
+    * and reclusters lazily.
     *
     * `recallTarget`: name the probes knob by what it buys — when set,
     * the engine CALIBRATES the index at build (measured recall-vs-probes

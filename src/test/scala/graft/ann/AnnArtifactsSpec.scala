@@ -8,12 +8,13 @@ import graft.TestFixtures._
 import graft.types.{Algorithm, NonLinearConfig}
 
 /**
- * Serialized ANN shard artifacts ([[AnnIndex.save]]/[[AnnIndex.load]]):
+ * Serialized ANN shard artifacts ([[RoutedAnnIndex.save]]/[[RoutedAnnIndex.load]],
+ * the one format of every index kind; here the id-hash `hnsw` arm):
  * restart must restore the EXACT graphs it saved (the build is
  * deterministic, so equality of search results over many probes is the
- * contract), stale shards (bucket mutated since the save) must delta-patch
- * while fresh shards deserialize, and unusable artifacts (config change,
- * missing manifest) must fall back to a rebuild, never fail.
+ * contract), a stale source stamp must rebuild the whole index, and
+ * unusable artifacts (config change, missing or pre-unification manifest,
+ * corrupt shard) must fall back to a rebuild, never fail.
  * Reference analog: non-linear indexes ride the persistence image
  * (ahnlich/utils/src/persistence.rs; SURVEY §2.4 "binary files next to the
  * table").
@@ -40,25 +41,21 @@ class AnnArtifactsSpec extends AnyFunSuite {
     ids.indices.map(i => (ids(i), vecs(i).toSeq)).toDF("id", "key")
   }
 
-  private def searchAll(index: AnnIndex): Seq[Seq[(Long, Double)]] =
-    queries.toSeq.map(q => index.search(q, K))
-
-  // fabricated persistence stamps: bucket b lives at "v1/_b=b"
-  private def stamps(v: Int = 1): Map[Int, String] =
-    (0 until Shards).map(b => b -> s"v$v/_b=$b").toMap
+  private def searchAll(index: RoutedAnnIndex): Seq[Seq[(Long, Double)]] =
+    queries.toSeq.map(q => index.search(q, K, index.numShards))
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft-ann-artifacts").toString
 
   test("save/load round-trip restores identical graphs (zero build shuffles)") {
     val df = toDf(ids, vecs)
-    val built = AnnIndex.build(df, Dim, cfg, numShards = Some(Shards))
+    val built = RoutedAnnIndex.buildHashed(df, Dim, cfg, numShards = Shards)
     val expected = searchAll(built)
     val dir = tmpDir()
-    AnnIndex.save(built, dir, stamps())
+    RoutedAnnIndex.save(built, dir, "v1")
 
-    // all stamps current -> every shard deserializes; the restore must not
-    // run ANY multi-stage (shuffle) job — a graph build shuffles keyedRows
+    // a current stamp -> every shard deserializes; the restore must not
+    // run ANY multi-stage (shuffle) job — a graph build shuffles its rows
     val stageCounts = scala.collection.mutable.ArrayBuffer[Int]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -66,7 +63,7 @@ class AnnArtifactsSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     val loaded = try {
-      val l = AnnIndex.load(spark, dir, cfg, stamps(), df, Dim)
+      val l = RoutedAnnIndex.load(spark, dir, cfg, "v1")
       spark.sparkContext.parallelize(Seq(1), 1).count() // listener flush marker
       val deadline = System.nanoTime() + 10_000_000_000L
       while (stageCounts.synchronized(stageCounts.isEmpty) &&
@@ -81,47 +78,82 @@ class AnnArtifactsSpec extends AnyFunSuite {
     loaded.get.unpersist(); built.unpersist()
   }
 
-  test("stale shards delta-patch on load; fresh shards keep their graphs") {
+  test("a stale source stamp rebuilds the whole index and re-stamps it") {
     val df = toDf(ids, vecs)
-    val built = AnnIndex.build(df, Dim, cfg, numShards = Some(Shards))
+    val built = RoutedAnnIndex.buildHashed(df, Dim, cfg, numShards = Shards)
     val dir = tmpDir()
-    AnnIndex.save(built, dir, stamps())
-    // "mutation": bucket 3's rows halve and its stamp moves to v2
+    RoutedAnnIndex.save(built, dir, "v1")
+    // "mutation": shard 3's rows halve and the store moves to v2
     val keep: ((Long, Int)) => Boolean = { case (id, b) => b != 3 || id % 2 == 0 }
     val newIds = ids.filter(id => keep((id, (id % Shards).toInt)))
     val newVecs = ids.indices.filter(i => keep((ids(i), (ids(i) % Shards).toInt)))
       .map(vecs(_)).toArray
     val newDf = toDf(newIds, newVecs)
-    val newStamps = stamps() + (3 -> "v2/_b=3")
-    val loaded = AnnIndex.load(spark, dir, cfg, newStamps, newDf, Dim)
-    assert(loaded.isDefined)
-    // must equal a from-scratch build on the mutated corpus (both paths are
-    // deterministic per shard, and only shard 3 changed)
-    val rebuilt = AnnIndex.build(newDf, Dim, cfg, numShards = Some(Shards))
-    assert(searchAll(loaded.get) == searchAll(rebuilt))
-    // self-heal: the patched artifacts are now current — a second load with
-    // the same stamps deserializes everything (and agrees)
-    val again = AnnIndex.load(spark, dir, cfg, newStamps, newDf, Dim)
-    assert(again.isDefined && searchAll(again.get) == searchAll(rebuilt))
-    Seq(loaded, again).foreach(_.get.unpersist()); rebuilt.unpersist(); built.unpersist()
+    assert(RoutedAnnIndex.load(spark, dir, cfg, "v2").isEmpty,
+      "a stale stamp must not restore any shard")
+    val rebuilt = RoutedAnnIndex.buildHashedOrLoad(newDf, Dim, cfg, Shards, dir, "v2")
+    // must equal a from-scratch build on the mutated corpus
+    val fresh = RoutedAnnIndex.buildHashed(newDf, Dim, cfg, numShards = Shards)
+    assert(searchAll(rebuilt) == searchAll(fresh))
+    // the rebuild saved under the new stamp: a second load restores (and agrees)
+    val again = RoutedAnnIndex.load(spark, dir, cfg, "v2")
+    assert(again.isDefined && searchAll(again.get) == searchAll(fresh))
+    Seq(rebuilt, fresh, again.get, built).foreach(_.unpersist())
   }
 
   test("config change / missing manifest fall back to None (rebuild)") {
     val df = toDf(ids, vecs)
-    val built = AnnIndex.build(df, Dim, cfg, numShards = Some(Shards))
+    val built = RoutedAnnIndex.buildHashed(df, Dim, cfg, numShards = Shards)
     val dir = tmpDir()
-    AnnIndex.save(built, dir, stamps())
+    RoutedAnnIndex.save(built, dir, "v1")
     val other = cfg.copy(maximumConnections = 8)
-    assert(AnnIndex.load(spark, dir, other, stamps(), df, Dim).isEmpty,
+    assert(RoutedAnnIndex.load(spark, dir, other, "v1").isEmpty,
       "a changed config must invalidate the artifacts")
-    assert(AnnIndex.load(spark, tmpDir(), cfg, stamps(), df, Dim).isEmpty,
+    assert(RoutedAnnIndex.load(spark, tmpDir(), cfg, "v1").isEmpty,
       "no manifest must mean no restore")
-    // corrupted shard file: stamp says present, bytes are garbage -> the
-    // whole load degrades to a rebuild signal, never an exception
+    // corrupted shard file: the manifest says present, bytes are garbage ->
+    // the whole load degrades to a rebuild signal, never an exception
     Files.write(Paths.get(dir, "s5.bin"), Array[Byte](1, 2, 3))
-    assert(AnnIndex.load(spark, dir, cfg, stamps(), df, Dim).isEmpty,
+    assert(RoutedAnnIndex.load(spark, dir, cfg, "v1").isEmpty,
       "corrupt artifacts must fall back to rebuild")
     built.unpersist()
+  }
+
+  test("a dir holding only the pre-unification hash-format manifest.json is refused, logged and rebuilt once") {
+    val df = toDf(ids, vecs)
+    val fresh = RoutedAnnIndex.buildHashed(df, Dim, cfg, numShards = Shards)
+    // the old layout: manifest.json with per-shard bucket stamps beside
+    // java-serialized s<i>.bin shards, and no routed manifest
+    val dir = tmpDir()
+    RoutedAnnIndex.save(fresh, dir, "v1")
+    Files.delete(Paths.get(dir, "routed_manifest.json"))
+    Files.writeString(Paths.get(dir, "manifest.json"),
+      s"""{"kind":"hnsw","parts":$Shards,"config":"$cfg","shards":{""" +
+        (0 until Shards).map(i => s""""$i":{"src":"v1/_b=$i","present":true}""")
+          .mkString(",") + "}}")
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val logger = org.apache.logging.log4j.core.LoggerContext.getContext(false)
+      .getLogger(RoutedAnnIndex.getClass.getName)
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "legacy-manifest", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        logged.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(org.apache.logging.log4j.Level.INFO)
+    val rebuilt = try RoutedAnnIndex.buildHashedOrLoad(df, Dim, cfg, Shards, dir, "v1")
+    finally { logger.removeAppender(appender); logger.setLevel(level) }
+    assert(logged.toArray.exists(_.toString.contains("manifest.json")),
+      s"no refusal logged: $logged")
+    assert(searchAll(rebuilt) == searchAll(fresh), "the rebuild answers differently")
+    // rebuilt once: the dir now holds the routed format only, and restores
+    assert(!Files.exists(Paths.get(dir, "manifest.json")))
+    val again = RoutedAnnIndex.load(spark, dir, cfg, "v1")
+    assert(again.isDefined && searchAll(again.get) == searchAll(fresh))
+    Seq(rebuilt, fresh, again.get).foreach(_.unpersist())
   }
 
   test("IVF artifacts: bit-identical restore, stamp staleness, corrupt fallback") {

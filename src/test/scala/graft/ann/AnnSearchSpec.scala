@@ -81,16 +81,16 @@ class AnnSearchSpec extends AnyFunSuite {
       s"routed scanSearch diverged from brute force: $gotRouted vs $expect")
     gotRouted.zip(expect).foreach { case ((_, c), (_, e)) =>
       assert(math.abs(c - e) < 1e-12, "scan closeness must be the exact kernel") }
-    // hash-sharded HNSW arm
+    // id-hash sharded HNSW arm
     val s = spark
     import s.implicits._
     val df = ids.indices.map(i => (ids(i), vecs(i).toSeq)).toDF("id", "key")
-    val hashIdx = AnnIndex.build(df, Dim, hnsw, numShards = Some(4))
+    val hashIdx = RoutedAnnIndex.buildHashed(df, Dim, hnsw, numShards = 4)
     try {
       val gotHash = hashIdx.scanSearch(q, 10, f)
       assert(gotHash.map(_._1) == expect.map(_._1))
       // a KD-tree index has no scan arm (its filtered search is exact)
-      val kd = AnnIndex.build(df, Dim, NonLinearConfig.KDTreeConfig(), numShards = Some(4))
+      val kd = RoutedAnnIndex.buildHashed(df, Dim, NonLinearConfig.KDTreeConfig(), numShards = 4)
       try intercept[graft.types.GraftException](kd.scanSearch(q, 10, f))
       finally kd.unpersist()
     } finally hashIdx.unpersist()

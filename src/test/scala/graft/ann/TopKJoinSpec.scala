@@ -48,6 +48,23 @@ class TopKJoinSpec extends AnyFunSuite {
     NonLinearConfig.HNSWConfig(efConstruction = 16, maximumConnections = 4,
       maximumConnectionsZero = 8, efSearch = 8),
     numShards = 4, iters = 1, storage = StorageSpec.Sq8)
+  /** The id-hash router (`hnsw`'s): every query probes every shard. */
+  private lazy val hashed = RoutedAnnIndex.buildHashed(corpus, Dim,
+    NonLinearConfig.HNSWConfig(efConstruction = 16, maximumConnections = 4,
+      maximumConnectionsZero = 8, efSearch = 8), numShards = 4)
+  /** A one-shard routed index whose nearest row for every query was
+    * deleted and set again: each such row is a stale graph node whose
+    * tombstone the re-set cleared AND an overlay-tail row. */
+  private lazy val reset = {
+    val one = RoutedAnnIndex.build(corpus, Dim,
+      NonLinearConfig.HNSWConfig(efSearch = 64), numShards = 1, iters = 1)
+    val (ids, vecs) = corpus.collect().map(r =>
+      (r.getLong(0), r.getSeq[Float](1).toArray)).unzip
+    val back = dedupedQueries.collect().toSeq.flatMap(r => bruteTopK(
+      Algorithm.CosineSimilarity, ids, vecs, r.getSeq[Float](1).toArray, 1)
+      .map(_._1)).distinct
+    one.delete(back).index.append(corpus.where(col("id").isin(back: _*))).get
+  }
 
   private val aliases: Seq[(String, DataFrame => DataFrame)] = Seq(
     "Dedup.topKJoin" -> (q => graft.dedup.Dedup.topKJoin(
@@ -63,7 +80,11 @@ class TopKJoinSpec extends AnyFunSuite {
       q, "qid", "v", K, nProbe = 4, shortlist = SL, cb = cb)),
     "RoutedAnnIndex.topKJoin" -> (q => routed.topKJoin(q, "qid", "v", K, probes = 4)),
     "RoutedAnnIndex.topKJoinRescored" -> (q => routed.topKJoinRescored(
-      q, "qid", "v", K, probes = 4, exact = corpus)))
+      q, "qid", "v", K, probes = 4, exact = corpus)),
+    "RoutedAnnIndex.topKJoin over the id-hash router" -> (q => hashed.topKJoin(
+      q, "qid", "v", K, probes = 1)),
+    "RoutedAnnIndex.topKJoin over re-set rows" -> (q => reset.topKJoin(
+      q, "qid", "v", K, probes = 1)))
 
   private def sorted(rows: Array[Row]): Seq[String] =
     rows.map(_.toString).toSeq.sorted

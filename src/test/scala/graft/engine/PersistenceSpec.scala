@@ -309,7 +309,7 @@ class PersistenceSpec extends AnyFunSuite {
       NonLinearConfig.HNSWConfig(), NonLinearConfig.KDTreeConfig()))
     val q = Array(10f, 3f, 10f, 1f)
     val before = e1.getSimN("art", q, 5, Algorithm.HNSW).collect().toSeq
-    assert(Files.exists(Paths.get(root, "index", "public", "art", "hnsw", "manifest.json")),
+    assert(Files.exists(Paths.get(root, "index", "public", "art", "hnsw", "routed_manifest.json")),
       "index artifacts were not written")
 
     val e2 = GraftEngine.load(spark, root)

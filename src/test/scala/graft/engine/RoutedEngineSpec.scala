@@ -342,6 +342,34 @@ class RoutedEngineSpec extends AnyFunSuite {
     e.dropStore("r4")
   }
 
+  test("a row deleted and set again is one result row: GetSimN still returns n distinct rows") {
+    // the re-set id lives twice in its shard — as a stale graph node whose
+    // tombstone the Set cleared, and in the overlay tail — and one-shard
+    // probes give the driver merge no other shard to fill the gap from
+    val rnd = new scala.util.Random(300L)
+    val rows = Seq.fill(300)(Array.fill(8)(rnd.nextFloat() * 2f - 1f))
+    for (shards <- Seq(1, 2); persistent <- Seq(false, true)) {
+      val root =
+        if (persistent) Some(Files.createTempDirectory("graft-reset").toString) else None
+      val e = new GraftEngine(spark, root)
+      e.createStore("rs", 8)
+      e.setSeq("rs", rows.zipWithIndex.map { case (v, i) => (v, meta("i" -> i.toString)) })
+      e.createNonLinearIndex("rs", Seq(NonLinearConfig.RoutedHNSWConfig(
+        numShards = shards, probes = 1)))
+      val x = rows(5)
+      assert(e.delKey("rs", Seq(x)) == 1)
+      e.setSeq("rs", Seq((x, meta("i" -> "back"))))
+      val got = e.getSimN("rs", x, 10, Algorithm.HNSW).collect()
+      val where = s"shards=$shards persistent=$persistent"
+      assert(got.length == 10, s"$where: ${got.length} rows")
+      assert(got.map(_.getSeq[Float](0)).distinct.length == 10, s"$where: repeated rows")
+      assert(got.head.getAs[Map[String, org.apache.spark.sql.Row]]("value")("i")
+        .getString(1) == "back", s"$where: the re-set row is not first")
+      e.purgeStores()
+      root.foreach(Persistence.deleteDir)
+    }
+  }
+
   test("drop lifecycle: dropping hnsw_routed makes Algorithm.HNSW fail; idempotency counts") {
     val e = freshRouted("r5")
     assert(e.dropNonLinearIndex("r5", Set("hnsw_routed")) == 1)

@@ -282,6 +282,40 @@ class StreamingSpec extends AnyFunSuite {
     } finally idx.unpersist()
   }
 
+  test("streamingRoutedCdc: an id-hash index past the collect cap rebuilds id-hash over survivors") {
+    val dim = 8
+    val rnd = new scala.util.Random(23L)
+    val vecs = (0 until 272).map(i =>
+      (i.toLong, Array.fill(dim)(rnd.nextFloat() * 2f - 1f))).toMap
+    val cfg = graft.types.NonLinearConfig.HNSWConfig(efSearch = 4096,
+      metric = graft.types.Algorithm.CosineSimilarity)
+    def frame(ids: Seq[Long]) = ids.map(i => (i, vecs(i).toSeq)).toDF("id", "key")
+    val initial = graft.ann.RoutedAnnIndex.buildHashed(
+      frame((0L until 256L)), dim, cfg, numShards = 4)
+    val handle = new StreamingIngest.StreamingRoutedIndex(initial)
+    val batch = ((0 until 64).map(i =>
+        (i.toLong, null.asInstanceOf[Seq[Float]], "delete", 1L)) ++
+      (256 until 272).map(i => (i.toLong, vecs(i.toLong).toSeq, "insert", 1L)))
+      .toDF("id", "key", "op", "seq")
+      .select(col("id"), col("key").cast("array<float>").as("key"),
+        col("op"), col("seq"))
+    handle.ingestCdc(batch, maxDeleteCollect = 10)
+    assert(handle.reclusterCount == 1, "past the cap the batch must rebuild")
+    val idx = handle.current
+    val fresh = graft.ann.RoutedAnnIndex.buildHashed(
+      frame((64L until 272L)), dim, cfg, numShards = 4)
+    try {
+      assert(idx.router == graft.ann.RoutedAnnIndex.Router.IdHash(4, dim),
+        "the rebuild must keep the id-hash router and its shard count")
+      assert(idx.storedRows == 256L - 64L + 16L)
+      assert(idx.tombstones.isEmpty)
+      (0L until 272L by 17L).foreach { i =>
+        assert(idx.search(vecs(i), 10, idx.numShards) == fresh.search(vecs(i), 10, 4),
+          s"rebuilt index diverges from a fresh id-hash build (query $i)")
+      }
+    } finally { idx.unpersist(); fresh.unpersist() }
+  }
+
   test("streamingNearDupCandidates emits the banded candidate pairs") {
     // the DedupSpec corpus: 0/1 near-dup, 2 exact dup of 0, 3 unrelated,
     // 4/5 near-dup — the batch minHashLshJoin verifies {0-1, 0-2, 1-2, 4-5}
