@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main: runs every registered query against
  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
@@ -50,7 +48,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = math.max(1, scala.util.Try(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt).getOrElse(3))
     val isolate = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE", "process")
@@ -68,13 +65,7 @@ object Bench {
       orchestrate(sfDir, runs)
       return
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Scale.localSession("4")
 
     // optional subset filter (comma-separated names / prefixes ending in
     // '*') — the regression-bisection lever: run one family, or replay an

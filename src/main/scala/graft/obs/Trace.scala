@@ -1,9 +1,13 @@
 package graft.obs
 
-import scala.collection.mutable.ArrayBuffer
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import scala.collection.mutable.ArrayDeque
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /**
  * Engine-op tracing: per-operation spans with Spark job attribution.
@@ -37,9 +41,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *  - Tracing is OFF by default: a disabled check is one volatile read,
  *    so the hot path (bench medians) is unchanged unless opted in via
  *    `Trace.enabled = true` or `SPARK_GRAFT_TRACE=1`.
- *  - Spans live in a bounded in-JVM ring (last [[MaxSpans]]): driver
- *    memory stays O(1) over unbounded sessions; a cluster deployment
- *    drains [[frame]] periodically to its metrics sink.
+ *  - Spans live in a bounded in-JVM ring (last [[MaxSpans]]); a span's
+ *    job/task tallies and stage map leave with it, so driver memory stays
+ *    O(1) over unbounded sessions. A cluster deployment drains [[frame]]
+ *    periodically to its metrics sink.
  */
 object Trace {
 
@@ -68,46 +73,64 @@ object Trace {
   @volatile var enabled: Boolean =
     sys.env.get("SPARK_GRAFT_TRACE").exists(v => v == "1" || v == "true")
 
-  private val spans = new ArrayBuffer[Rec]()
-  private val seqGen = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val spans = new ArrayDeque[Rec]()
+  private val seqGen = new AtomicLong(0L)
   private val current = new ThreadLocal[Long] { override def initialValue(): Long = -1L }
 
-  // per-group tallies, fed by the listener; group ids are "graft-<seq>"
-  private val groupJobs = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
-  private val groupTasks = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private val groupTaskTime = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+  // per-group tallies, fed by the listener; group ids are "graft-<seq>". A
+  // tally is opened with its span and dropped when the ring evicts the
+  // span, together with the stage ids it claimed; events for a group with
+  // no open tally (evicted, or cleared by reset) are ignored
+  private final class Tally {
+    val jobs = new AtomicInteger()
+    val tasks = new AtomicLong()
+    val taskTimeMs = new AtomicLong()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+  }
+  private val tallies = new ConcurrentHashMap[String, Tally]()
+  private val stageGroup = new ConcurrentHashMap[Int, String]()
   @volatile private var listenerInstalled = false
 
-  private final class GroupListener extends SparkListener {
+  private[obs] final class GroupListener extends SparkListener {
     override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
       val group = Option(jobStart.properties)
         .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).orNull
-      if (group != null && group.startsWith("graft-")) {
-        groupJobs.computeIfAbsent(group, _ => new java.util.concurrent.atomic.AtomicInteger())
-          .incrementAndGet()
-        jobStart.stageIds.foreach(sid => stageGroup.put(sid, group))
+      val t = if (group == null) null else tallies.get(group)
+      if (t != null) {
+        t.jobs.incrementAndGet()
+        jobStart.stageIds.foreach { sid => stageGroup.put(sid, group); t.stages.add(sid) }
       }
     }
     override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
       val group = stageGroup.get(taskEnd.stageId)
-      if (group != null) {
-        groupTasks.computeIfAbsent(group, _ => new java.util.concurrent.atomic.AtomicLong())
-          .incrementAndGet()
-        if (taskEnd.taskInfo != null)
-          groupTaskTime.computeIfAbsent(group, _ => new java.util.concurrent.atomic.AtomicLong())
-            .addAndGet(taskEnd.taskInfo.duration)
+      val t = if (group == null) null else tallies.get(group)
+      if (t != null) {
+        t.tasks.incrementAndGet()
+        if (taskEnd.taskInfo != null) t.taskTimeMs.addAndGet(taskEnd.taskInfo.duration)
       }
     }
   }
+  private[obs] val listener = new GroupListener
 
   private def ensureListener(spark: SparkSession): Unit =
     if (!listenerInstalled) synchronized {
       if (!listenerInstalled) {
-        spark.sparkContext.addSparkListener(new GroupListener)
+        spark.sparkContext.addSparkListener(listener)
         listenerInstalled = true
       }
     }
+
+  /** Append to the ring, evicting the oldest spans and their tallies. */
+  private def record(r: Rec): Unit = spans.synchronized {
+    spans += r
+    while (spans.length > MaxSpans) {
+      val t = tallies.remove(spans.removeHead().group)
+      if (t != null) t.stages.forEach(sid => stageGroup.remove(sid.intValue))
+    }
+  }
+
+  /** (tallies, stage entries) held — the listener's driver footprint. */
+  private[obs] def tallySizes: (Int, Int) = (tallies.size, stageGroup.size)
 
   /** Wrap one engine op. No-op pass-through (one volatile read) when
     * tracing is disabled. */
@@ -124,6 +147,7 @@ object Trace {
       val prevGroup = sc.getLocalProperty("spark.jobGroup.id")
       val prevDesc = sc.getLocalProperty("spark.job.description")
       current.set(seq)
+      tallies.put(group, new Tally)
       sc.setJobGroup(group, s"graft $op($store)", interruptOnCancel = false)
       val startMs = System.currentTimeMillis()
       val t0 = System.nanoTime()
@@ -138,10 +162,7 @@ object Trace {
         current.set(parent)
         sc.setLocalProperty("spark.jobGroup.id", prevGroup)
         sc.setLocalProperty("spark.job.description", prevDesc)
-        spans.synchronized {
-          spans += Rec(seq, parent, op, store, startMs, dur, ok, err, group)
-          if (spans.length > MaxSpans) spans.remove(0, spans.length - MaxSpans)
-        }
+        record(Rec(seq, parent, op, store, startMs, dur, ok, err, group))
       }
     }
 
@@ -156,12 +177,9 @@ object Trace {
     if (enabled) {
       ensureListener(spark)
       val seq = seqGen.getAndIncrement()
-      spans.synchronized {
-        spans += Rec(seq, current.get(), op, store,
-          System.currentTimeMillis(), 0L, ok = true, error = "",
-          group = s"graft-$seq")
-        if (spans.length > MaxSpans) spans.remove(0, spans.length - MaxSpans)
-      }
+      record(Rec(seq, current.get(), op, store,
+        System.currentTimeMillis(), 0L, ok = true, error = "",
+        group = s"graft-$seq"))
     }
 
   // ------------------------------------------------- fixture accounting
@@ -210,15 +228,18 @@ object Trace {
 
   /** Recorded spans as a DataFrame (the queryable surface — filter,
     * aggregate, join against catalog frames like any other table).
-    * Job/task tallies are read here, after the listener bus has had time
-    * to drain the events the spans' jobs posted. */
+    * Job/task tallies are read here, after draining the listener bus
+    * (a bounded wait): every job a closed span launched has posted its
+    * events by then, so the tallies are complete. */
   def frame(spark: SparkSession): DataFrame = {
+    if (listenerInstalled) ListenerBridge.drain(spark.sparkContext)
     val snap = spans.synchronized { spans.toSeq }
     val resolved = snap.map { r =>
-      Span(r.seq, r.parent, r.op, r.store, r.startMs, r.durNs, r.ok, r.error,
-        Option(groupJobs.get(r.group)).map(_.get()).getOrElse(0),
-        Option(groupTasks.get(r.group)).map(_.get()).getOrElse(0L),
-        Option(groupTaskTime.get(r.group)).map(_.get()).getOrElse(0L))
+      val t = tallies.get(r.group)
+      if (t == null) Span(r.seq, r.parent, r.op, r.store, r.startMs, r.durNs, r.ok,
+        r.error, 0, 0L, 0L)
+      else Span(r.seq, r.parent, r.op, r.store, r.startMs, r.durNs, r.ok, r.error,
+        t.jobs.get(), t.tasks.get(), t.taskTimeMs.get())
     }
     import spark.implicits._
     resolved.toDF()
@@ -226,6 +247,6 @@ object Trace {
 
   def reset(): Unit = {
     spans.synchronized { spans.clear() }
-    groupJobs.clear(); groupTasks.clear(); groupTaskTime.clear(); stageGroup.clear()
+    tallies.clear(); stageGroup.clear()
   }
 }

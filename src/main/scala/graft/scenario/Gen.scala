@@ -1,23 +1,24 @@
-package graft
+package graft.scenario
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scale.Run
+
 /**
- * Scale-stress data generator (VERDICT r7 ask #5): every 100 TB claim in
- * the scaladocs is asserted from sf0.1 runs (~600k lineitem rows, 5k docs),
- * so this main manufactures a drop-in scale directory from the driver's
- * sf0.1 parquet and lets Bench run the dedup/retrieval/text families at
- * 100x the document count. Fully distributed (cross-join against a
- * broadcast replica range; all perturbation is codegen'd hash arithmetic),
- * deterministic (xxhash64-keyed, no RNG state), and honest about duplicate
- * structure: a web-crawl-shaped corpus is mostly unique with a heavy
- * duplicated minority, so replicas are salted per-token into uniqueness
+ * `gen`: the scale-stress data generator. Every 100 TB claim in the
+ * scaladocs is asserted from sf0.1 runs (~600k lineitem rows, 5k docs), so
+ * this manufactures a drop-in scale directory from sf0.1 parquet and lets
+ * Bench run the dedup/retrieval/text families at 100x the document count.
+ * Fully distributed (cross-join against a broadcast replica range; all
+ * perturbation is codegen'd hash arithmetic), deterministic (xxhash64-keyed,
+ * no RNG state), and honest about duplicate structure: a web-crawl-shaped
+ * corpus is mostly unique with a heavy duplicated minority, so replicas are salted per-token into uniqueness
  * EXCEPT a hash-chosen ~10% exact-copy and ~15% near-dup slice. That gives
  * the LSH/SimHash/CC/span operators real cluster populations (~25-member
  * near-dup families) instead of a degenerate all-unique or all-dup corpus.
  *
- * Env knobs: SPARK_GRAFT_SCALE_SRC (default /root/testdata/sf0.1),
+ * Env knobs: SPARK_GRAFT_SCALE_SRC (the unscaled source dir, required),
  * SPARK_GRAFT_SCALE_OUT (default scale/sf1), SPARK_GRAFT_SCALE_DOCS /
  * _EMB / _EVENTS (multipliers, default 100/100/10), SPARK_GRAFT_CPUS.
  *
@@ -25,25 +26,19 @@ import org.apache.spark.sql.functions._
  * source id, so cross-replica joins (decontamination benchmark side,
  * BM25 query frames) keep their semantics.
  */
-object ScaleGen {
+object Gen {
   private val DocStride = 1000000L // > max sf0.1 doc_id (4999)
   private val VecStride = 1000000L // > max sf0.1 vec_id (1999)
   private val EvStride = 100000000L
 
-  def main(args: Array[String]): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "scale/sf1")
-    val docsMult = sys.env.getOrElse("SPARK_GRAFT_SCALE_DOCS", "100").toInt
-    val embMult = sys.env.getOrElse("SPARK_GRAFT_SCALE_EMB", "100").toInt
-    val evMult = sys.env.getOrElse("SPARK_GRAFT_SCALE_EVENTS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scalegen")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def run(r: Run): Unit = {
+    val spark = r.spark
+    def env(k: String, d: String) = r.env.getOrElse(k, d)
+    val src = r.required("SPARK_GRAFT_SCALE_SRC")
+    val out = env("SPARK_GRAFT_SCALE_OUT", "scale/sf1")
+    val docsMult = env("SPARK_GRAFT_SCALE_DOCS", "100").toInt
+    val embMult = env("SPARK_GRAFT_SCALE_EMB", "100").toInt
+    val evMult = env("SPARK_GRAFT_SCALE_EVENTS", "10").toInt
 
     // TPC-H star tables pass through unscaled: the scale families under
     // test (dedup/embed/text/hybrid/pipeline/events) never read them, but
@@ -78,7 +73,6 @@ object ScaleGen {
 
     val cs = counts.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     println(s"""{"scalegen":"$out","docs_mult":$docsMult,"emb_mult":$embMult,"events_mult":$evMult,"rows":$cs}""")
-    spark.stop()
   }
 
   private def writeScaled(out: String, name: String, df: DataFrame): Long = {

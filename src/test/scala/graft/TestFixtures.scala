@@ -26,58 +26,28 @@ object TestFixtures {
     s
   }
 
-  def splitmix64(seed: Long): Long = {
-    var z = seed + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
+  def splitmix64(seed: Long): Long = Scale.SiftGen.splitmix64(seed)
 
   /** Uniform [0,1) double from a (seed, index) pair — replayable anywhere. */
-  def u01(seed: Long, i: Long): Double =
-    (splitmix64(seed * 0x632be59bd9b4e019L + i) >>> 11).toDouble / (1L << 53).toDouble
+  def u01(seed: Long, i: Long): Double = Scale.SiftGen.u01(seed, i)
 
   /** Deterministic pseudo-gaussian-ish vector (sum of two uniforms, centered). */
-  def vec(seed: Long, idx: Long, dim: Int): Array[Float] = {
-    val a = new Array[Float](dim)
-    var j = 0
-    while (j < dim) {
-      val base = idx * dim + j
-      a(j) = (u01(seed, base * 2) + u01(seed, base * 2 + 1) - 1.0).toFloat
-      j += 1
-    }
-    a
-  }
+  def vec(seed: Long, idx: Long, dim: Int): Array[Float] = Scale.SiftGen.vec(seed, idx, dim)
 
   /** n deterministic vectors with ids 0..n-1 (id = index, so tie-breaks are
     * directly comparable to brute force). */
   def dataset(seed: Long, n: Int, dim: Int): (Array[Long], Array[Array[Float]]) =
     (Array.tabulate(n)(_.toLong), Array.tabulate(n)(i => vec(seed, i.toLong, dim)))
 
-  /** SIFT-shaped vectors: points on a low-intrinsic-dimension manifold
-    * (x = W·z with z ∈ R^intrinsic), like real descriptor corpora (SIFT's
-    * intrinsic dim ≈ 12-16). Uniform random high-dim points are
-    * near-equidistant — the degenerate case no real ANN corpus looks like,
-    * and the one graph-based ANN provably can't index well. */
-  final class SiftLike(seed: Long, dim: Int, intrinsic: Int) extends Serializable {
-    private val w: Array[Array[Float]] =
-      Array.tabulate(dim)(j => vec(seed * 17 + 11, j.toLong, intrinsic))
-    def apply(idx: Long): Array[Float] = {
-      val z = vec(seed * 7 + 3, idx, intrinsic)
-      val a = new Array[Float](dim)
-      var j = 0
-      while (j < dim) {
-        var s = 0.0; var t = 0
-        while (t < intrinsic) { s += w(j)(t) * z(t); t += 1 }
-        a(j) = s.toFloat; j += 1
-      }
-      a
-    }
-  }
-
+  /** SIFT-shaped vectors from the scale harness's generator
+    * ([[Scale.SiftGen]]): points on a low-intrinsic-dimension manifold, like
+    * real descriptor corpora (SIFT's intrinsic dim ≈ 12-16). Uniform random
+    * high-dim points are near-equidistant — the degenerate case no real ANN
+    * corpus looks like, and the one graph-based ANN provably can't index
+    * well. */
   def siftLikeDataset(seed: Long, n: Int, dim: Int,
-      intrinsic: Int = 10): (Array[Long], Array[Array[Float]], SiftLike) = {
-    val gen = new SiftLike(seed, dim, intrinsic)
+      intrinsic: Int = 10): (Array[Long], Array[Array[Float]], Scale.SiftGen) = {
+    val gen = new Scale.SiftGen(seed, dim, intrinsic)
     (Array.tabulate(n)(_.toLong), Array.tabulate(n)(i => gen(i.toLong)), gen)
   }
 

@@ -30,7 +30,7 @@ class RecallSpec extends AnyFunSuite {
 
   // manifold generator = SIFT-shaped (low intrinsic dim, like real
   // descriptor corpora; uniform random 128-d points are near-equidistant,
-  // which no real dataset resembles — see TestFixtures.SiftLike)
+  // which no real dataset resembles — see Scale.SiftGen)
   private lazy val (ids, vecs, gen) = siftLikeDataset(seed = 4242L, n = N, dim = Dim)
   private lazy val queries: Array[Array[Float]] =
     Array.tabulate(NQueries)(i => gen((N + i).toLong))

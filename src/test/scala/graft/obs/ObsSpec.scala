@@ -177,4 +177,52 @@ class ObsSpec extends AnyFunSuite {
       sc.clearJobGroup()
     }
   }
+
+  test("a Set span's jobs and tasks read complete on the first frame, no retry") {
+    val e = new graft.engine.GraftEngine(spark)
+    Trace.enabled = true
+    try {
+      e.createStore("obs_once", 4)
+      e.setSeq("obs_once", Seq(
+        (Array(1f, 0f, 0f, 0f), Map("t" -> MetadataValue.RawString("x")))))
+    } finally Trace.enabled = false
+    val set = Trace.frame(spark).where(col("store") === "obs_once" && col("op") === "Set")
+      .select("jobs", "tasks").collect()
+    assert(set.length == 1)
+    assert(set.head.getInt(0) > 0, "Set span read jobs = 0")
+    assert(set.head.getLong(1) > 0L, "Set span read tasks = 0")
+  }
+
+  // last in the suite: it cycles the span ring past MaxSpans
+  test("evicted spans drop their listener tallies: driver memory stays bounded") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val extra = 500
+    Trace.reset()
+    Trace.enabled = true
+    try {
+      (0 until Trace.MaxSpans + extra).foreach { i =>
+        Trace.span(spark, "Synthetic", "obs_mem") {
+          // synthetic events for this span's group: no Spark job runs
+          val props = new java.util.Properties()
+          props.setProperty("spark.jobGroup.id", sc.getLocalProperty("spark.jobGroup.id"))
+          val stages = Seq(2 * i, 2 * i + 1).map(sid => new StageInfo(sid, 0, "synthetic", 1,
+            Seq.empty, Seq.empty, "", null, Seq.empty, None, 0, false, 0))
+          Trace.listener.onJobStart(SparkListenerJobStart(i, 0L, stages, props))
+          Trace.listener.onTaskEnd(SparkListenerTaskEnd(2 * i + 1, 0, "ResultTask",
+            org.apache.spark.Success, null, null, null))
+        }
+      }
+    } finally Trace.enabled = false
+    val (tallies, stages) = Trace.tallySizes
+    assert(tallies <= Trace.MaxSpans, "tallies of evicted spans were kept")
+    assert(stages <= 2 * Trace.MaxSpans, "stage entries of evicted spans were kept")
+    val spans = Trace.frame(spark).where(col("store") === "obs_mem")
+      .select("seq", "jobs", "tasks").collect()
+    assert(spans.length == Trace.MaxSpans)
+    // the survivors still carry their synthetic tallies
+    assert(spans.forall(r => r.getInt(1) == 1 && r.getLong(2) == 1L))
+    Trace.reset()
+    assert(Trace.tallySizes == ((0, 0)))
+  }
 }
