@@ -274,8 +274,9 @@ final class HnswIndex(
     if (entryPoint < 0) return Nil
     val nodeAccept: Int => Boolean =
       if (accept == null) null else (n: Int) => accept(ids(n))
-    // per-query scorer: PQ builds its ADC tables ONCE here (bit-identical
-    // to distQuery); float/SQ8 stores score directly (their default)
+    // per-query scorer, set up ONCE per search and bit-identical to
+    // distQuery (PQ builds its ADC tables, the float store takes the
+    // query norm)
     val distTo: Int => Double = store.queryScorer(q)
     var ep = Seq((entryPoint, distTo(entryPoint)))
     var lc = maxLevel
@@ -289,6 +290,11 @@ final class HnswIndex(
       .take(k)
       .map { case (n, d) => (ids(n), -d) } // closeness = -distance
   }
+
+  /** Neighbour lists by node and level, in node order (graph
+    * identity checks). */
+  private[ann] def neighborLists: Seq[Seq[Seq[Int]]] =
+    neighbors.toSeq.map(_.toSeq.map(b => (0 until b.length).map(b(_))))
 
   def vectorOf(id: Long): Option[Array[Float]] = {
     val i = idToIdx.get(id)

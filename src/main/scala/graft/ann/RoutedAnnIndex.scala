@@ -2,9 +2,16 @@ package graft.ann
 
 import java.util.Arrays
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PointRead
+import org.apache.spark.sql.types.{FloatType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.engine.GraftEngine
@@ -1984,28 +1991,47 @@ object AnnSearch {
   }
 
   /** ids → rows, recompute exact similarity on the tiny result set
-    * (store.rs:386-398 hydration). The predicate, when present, is re-applied
-    * exactly here so Bloom false positives never reach the result. The scan
-    * is bucket-pruned by the hit ids (engine.pointView), so hydration opens
-    * O(touched buckets) files, not the store. */
-  private def hydrate(engine: GraftEngine, st: GraftEngine#StoreState,
+    * (store.rs:386-398 hydration). One [[GraftEngine.pointRows]] job reads
+    * the hit rows off the generation's planned rows — bucket-pruned on a
+    * persistent store, so hydration stays O(touched buckets) — with the
+    * predicate, when present, interpreted on each row so Bloom false
+    * positives never reach the result. The driver rescores the at most
+    * |hits| rows with the kernel arithmetic, orders them (closeness desc,
+    * id asc) under Spark's double ordering, and returns the top n as an
+    * eager local frame: collecting it runs no job. */
+  private[graft] def hydrate(engine: GraftEngine, st: GraftEngine#StoreState,
       hits: Seq[(Long, Double)], q: Array[Float], n: Int,
       scoringAlgo: Algorithm, condition: Option[PredicateCondition]): DataFrame = {
     if (hits.isEmpty) return emptyResult(engine)
-    val ids = hits.map(_._1)
-    val base = engine.pointView(st.meta.name, ids, st.meta.schema)
-      .where(col("id").isin(ids: _*))
-    val verified = condition.fold(base)(c =>
-      base.where(Predicates.toColumn(c, col("value"))))
-    engine.linearTopK(verified, q, n, scoringAlgo)
+    val schema = st.df.schema
+    val (id, key, value) =
+      (schema.fieldIndex("id"), schema.fieldIndex("key"), schema.fieldIndex("value"))
+    val qa = UnsafeArrayData.fromPrimitiveArray(q)
+    val scored = engine.pointRows(st, hits.map(_._1), condition).map(r =>
+      (r, Similarity.closenessOf(scoringAlgo, r.getArray(key), qa)))
+    val top = scored.sortWith { case ((ra, ca), (rb, cb)) =>
+      val c = SQLOrderingUtil.compareDoubles(cb, ca)
+      if (c != 0) c < 0 else ra.getLong(id) < rb.getLong(id)
+    }.take(n)
+    val distance = Similarity.reportsDistance(scoringAlgo)
+    PointRead.localFrame(engine.spark, resultSchema(engine, schema, scoringAlgo),
+      top.toSeq.map { case (r, c) =>
+        InternalRow(r.getArray(key), r.getMap(value), (if (distance) -c else c).toFloat)
+      })
   }
 
-  private def emptyResult(engine: GraftEngine): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(
-      StoreSchema.entrySchema.drop(1) :+
-        org.apache.spark.sql.types.StructField("similarity",
-          org.apache.spark.sql.types.FloatType))
-    engine.spark.createDataFrame(
-      engine.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  /** The (key, value, similarity) schema a GetSimN over a store of
+    * `storeSchema` returns — the linear form's ([[GraftEngine.linearTopK]]),
+    * analyzed once per (store schema, algorithm), so eager and lazy results
+    * agree on names, types and nullability. */
+  private val resultSchemas = TrieMap[(StructType, Algorithm), StructType]()
+  private def resultSchema(engine: GraftEngine, storeSchema: StructType,
+      algo: Algorithm): StructType =
+    resultSchemas.getOrElseUpdate((storeSchema, algo),
+      engine.linearTopK(PointRead.localFrame(engine.spark, storeSchema, Nil),
+        Array(0f), 1, algo).schema)
+
+  private def emptyResult(engine: GraftEngine): DataFrame =
+    PointRead.localFrame(engine.spark, StructType(
+      StoreSchema.entrySchema.drop(1) :+ StructField("similarity", FloatType)), Nil)
 }

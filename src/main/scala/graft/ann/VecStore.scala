@@ -249,7 +249,7 @@ object NodeStorage {
  * to the pre-seam implementation and the SQ8 store is bit-identical to
  * scoring [[graft.functions.Quantize.dequantize]]d vectors.
  */
-private[ann] sealed trait VecStore extends Serializable {
+private[ann] trait VecStore extends Serializable {
   def size: Int
   /** Append a float vector (encodes under SQ8 — [[graft.functions
     * .Quantize.int8Codes]] math: `min(255, floor((x−mn)·255/(mx−mn)))`,
@@ -280,8 +280,23 @@ private[ann] sealed trait VecStore extends Serializable {
 @SerialVersionUID(1L)
 private[ann] final class FloatVecStore(metric: Algorithm) extends VecStore {
   private val vecs = mutable.ArrayBuffer[Array[Float]]()
+  // cosine only: per-node L2 norms ([[jvm.norm]], so every score is
+  // bit-equal to [[jvm.cosine]]), built on first use and extended at add.
+  // Transient, so the serialized shard is unchanged. Its fields keep their
+  // JVM names, which an @inline method's field reads would mangle: `norm`
+  // reads `vecs` and so must not be @inline (NormCacheSpec pins the names)
+  @inline private def cosine: Boolean = metric != Algorithm.EuclideanDistance &&
+    metric != Algorithm.DotProductSimilarity
+  @transient @volatile private var norms: Array[Double] = _
+  @transient private var nNorms = 0
   def size: Int = vecs.length
-  def add(v: Array[Float]): Unit = vecs += v
+  def add(v: Array[Float]): Unit = {
+    vecs += v
+    if (cosine && norms != null) synchronized {
+      if (nNorms == norms.length) norms = java.util.Arrays.copyOf(norms, nNorms * 2)
+      norms(nNorms) = jvm.norm(v); nNorms += 1
+    }
+  }
   def addPayload(p: VecPayload): Unit = p match {
     case VecPayload.F32(v) => add(v)
     case other => throw new IllegalStateException(
@@ -289,14 +304,39 @@ private[ann] final class FloatVecStore(metric: Algorithm) extends VecStore {
   }
   def payload(i: Int): VecPayload = VecPayload.F32(vecs(i))
   def export(i: Int): Array[Float] = vecs(i)
+  private def norm(i: Int): Double = {
+    var ns = norms
+    if (ns == null) synchronized {
+      if (norms == null) {
+        val n = vecs.length
+        val b = new Array[Double](math.max(16, n))
+        var j = 0
+        while (j < n) { b(j) = jvm.norm(vecs(j)); j += 1 }
+        nNorms = n; norms = b
+      }
+      ns = norms
+    }
+    ns(i)
+  }
+  /** [[jvm.cosine]] with both norms in hand — same operation order. */
+  @inline private def cos(a: Array[Float], na: Double, b: Array[Float], nb: Double): Double =
+    if (na == 0.0 || nb == 0.0) 0.0 else jvm.dot(a, b) / (na * nb)
   @inline private def dist(a: Array[Float], b: Array[Float]): Double =
     metric match {
       case Algorithm.EuclideanDistance => jvm.sqEuclidean(a, b)
-      case Algorithm.DotProductSimilarity => -jvm.dot(a, b)
-      case _ => -jvm.cosine(a, b)
+      case _ => -jvm.dot(a, b)
     }
-  def distNodes(i: Int, j: Int): Double = dist(vecs(i), vecs(j))
-  def distQuery(q: Array[Float], i: Int): Double = dist(q, vecs(i))
+  def distNodes(i: Int, j: Int): Double =
+    if (cosine) -cos(vecs(i), norm(i), vecs(j), norm(j)) else dist(vecs(i), vecs(j))
+  def distQuery(q: Array[Float], i: Int): Double =
+    if (cosine) -cos(q, jvm.norm(q), vecs(i), norm(i)) else dist(q, vecs(i))
+  /** The query norm once per search, not once per scored node. */
+  override def queryScorer(q: Array[Float]): Int => Double =
+    if (!cosine) i => dist(q, vecs(i))
+    else {
+      val nq = jvm.norm(q)
+      i => -cos(q, nq, vecs(i), norm(i))
+    }
 }
 
 /** Scalar (per-vector min/max) int8 node storage — 1 byte/dimension + two

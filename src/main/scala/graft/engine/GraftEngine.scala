@@ -3,7 +3,9 @@ package graft.engine
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PointRead
 import org.apache.spark.storage.StorageLevel
 
 import graft.types._
@@ -31,8 +33,10 @@ import graft.functions.{Predicates, Similarity}
  *    the touched bucket set, not the store. The post-write store DataFrame
  *    is a lazy parquet read of the new bucket set, so no mutation ever
  *    scans the full table.
- *  - Point lookups hash the probe keys with the *same expression* and
- *    broadcast-semi-join — no JVM-side mirror of the hash needed.
+ *  - Point lookups hash the probe keys with the *same expression* (no
+ *    JVM-side mirror of the hash) and read the matching rows in one job
+ *    over the generation's planned rows, returning an eager local frame
+ *    ([[pointRows]]) — no per-request Catalyst plan.
  *  - Search is `closeness DESC, id ASC` + LIMIT n → Catalyst plans
  *    TakeOrderedAndProject: per-partition bounded heaps merged on the driver,
  *    the exact algorithm the reference hand-rolls with rayon
@@ -57,7 +61,16 @@ class GraftEngine(val spark: SparkSession,
       // rebuild (ensureIndex)
       indexes: Map[String, graft.ann.RoutedAnnIndex] = Map.empty,
       version: Long = 0L,
-      bucketPaths: Map[Int, String] = Map.empty)
+      bucketPaths: Map[Int, String] = Map.empty) {
+    /** The generation's rows, planned once: the cached frame's physical
+      * plan, which every point read of this generation runs. */
+    private[graft] lazy val rows: org.apache.spark.rdd.RDD[InternalRow] =
+      df.queryExecution.toRdd
+    /** Per partition of [[rows]], the persistence buckets it scans
+      * ([[scanBuckets]], no job); None for an in-memory store. */
+    private[graft] lazy val partitionBuckets: Option[Array[Set[Int]]] =
+      if (persistRoot.isEmpty) None else scanBuckets(rows, bucketPaths)
+  }
 
   private val catalog = TrieMap[(String, String), StoreState]()
   val DefaultSchema = "public"
@@ -138,13 +151,26 @@ class GraftEngine(val spark: SparkSession,
       spark.read.schema(entrySchema).parquet(paths.values.toSeq.sorted
         .map(p => s"$root/data/$schema/$name/$p"): _*)
 
+  /** Per partition of a persistent generation's planned rows, the buckets
+    * it scans: each scanned file's directory matched against the bucket
+    * dirs of `paths` (relative to the store's data dir, as [[writeBuckets]]
+    * names them) — no job. None when some file lies in no bucket dir; a
+    * reader then runs every partition. */
+  private def scanBuckets(rows: org.apache.spark.rdd.RDD[InternalRow],
+      paths: Map[Int, String]): Option[Array[Set[Int]]] =
+    PointRead.partitionDirs(rows).flatMap { parts =>
+      val bs = parts.map(_.map(dir =>
+        paths.collectFirst { case (b, rel) if dir.endsWith("/" + rel) => b }))
+      if (bs.forall(_.forall(_.isDefined))) Some(bs.map(_.flatten.toSet)) else None
+    }
+
   // ---------------------------------------------------------------- helpers
 
   /** id = exact-bit content hash of the vector (StoreKeyId analog). */
   def keyId(keyCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     xxhash64(keyCol)
 
-  private def state(schema: String, name: String): StoreState =
+  private[graft] def state(schema: String, name: String): StoreState =
     catalog.getOrElse((schema, name), throw GraftErrors.storeNotFound(schema, name))
 
   def storeDf(name: String, schema: String = DefaultSchema): DataFrame =
@@ -210,14 +236,27 @@ class GraftEngine(val spark: SparkSession,
       case None => st.df
     }
 
-  /** Read twin of [[mutationView]] for point lookups by known content ids:
-    * a persistent store opens ONLY the buckets the ids can hash into
-    * (file-level pruning — at 100 TB a GetKey touches 1/NumBuckets of the
-    * files instead of listing all of them); in-memory stores use the
-    * cached df. */
-  private[graft] def pointView(name: String, ids: Seq[Long],
-      schema: String = DefaultSchema): DataFrame = {
-    mutationView(state(schema, name), touchOfIds(ids))
+  /** Rows of one store generation by content id — the point read behind
+    * GetKey and indexed-GetSimN hydration (store.rs:386-398, 413-423). One
+    * job over the generation's planned rows ([[StoreState.rows]]), keeping
+    * only rows whose id is in `ids` and, when given, that satisfy `cond`
+    * (interpreted on the row). A persistent store runs only the partitions
+    * that scan the ids' buckets, so a lookup stays O(touched buckets); an
+    * in-memory store runs every partition of its cached frame. Rows come
+    * back in the store's (id, key, value) layout. */
+  private[graft] def pointRows(st: GraftEngine#StoreState, ids: Seq[Long],
+      cond: Option[PredicateCondition] = None): Array[InternalRow] = {
+    val want = ids.toSet
+    val parts = st.partitionBuckets match {
+      case Some(pb) =>
+        val bs = touchOfIds(ids)
+        pb.indices.filter(i => pb(i).exists(bs))
+      case None => st.rows.partitions.indices
+    }
+    val schema = st.df.schema
+    PointRead.select(spark.sparkContext, st.rows, parts, schema.fieldIndex("id"),
+      want, cond.map(c =>
+        PointRead.boundPredicate(spark, Predicates.toColumn(c, col("value")), schema)))
   }
 
   /** Swap in the result of a mutation. `rewrite` maps a source of existing
@@ -780,42 +819,38 @@ class GraftEngine(val spark: SparkSession,
     set(name, entriesDf(entries), DefaultSchema)
 
   /** GetKey — point lookup by exact vector(s) (store.rs:413-423, 858-867).
-    * Probe keys are hashed with the same expression and semi-joined; the
-    * probe ids (tiny, user-bounded) are collected once so the scan is
-    * pruned to the ids' hash buckets, like every mutation's read. */
+    * Probe keys hash to content ids with the row-identity expression, and
+    * one [[pointRows]] job reads the matching rows. The result is an eager
+    * local frame: collecting it runs no job, and no later mutation of the
+    * store can break it. */
   def getKey(name: String, keys: Seq[Array[Float]],
       schema: String = DefaultSchema): DataFrame = traced("GetKey", name, schema) {
     val st = state(schema, name)
     keys.find(_.length != st.meta.dimension).foreach(k =>
       throw GraftErrors.dimensionMismatch(st.meta.dimension, k.length))
-    val (pids, probe) = probeIds(keys)
-    pointView(name, pids, schema)
-      .join(broadcast(probe), col("id") === col("_pid"), "left_semi")
-      .select("key", "value")
+    val pids = probeIds(keys)
+    val s = st.df.schema
+    val (k, v) = (s.fieldIndex("key"), s.fieldIndex("value"))
+    PointRead.localFrame(spark, org.apache.spark.sql.types.StructType(Seq(s(k), s(v))),
+      pointRows(st, pids).toSeq.map(r => InternalRow(r.getArray(k), r.getMap(v))))
   }
 
-  /** Content ids of probe key vectors + the 1-column `_pid` probe frame.
-    * Small probes (the interactive GetKey/DelKey shape) evaluate the SAME
-    * keyId expression interpretively on the driver — zero Spark jobs, the
-    * Upsert idiom — and the probe frame is a LocalRelation (its broadcast
-    * collects driver-side, no job either); big probes (CDC delete batches,
-    * up to maxDeletesPerBatch keys) keep the single hashing job, where
-    * per-expression driver eval would be the slower arm (round-17). */
-  private def probeIds(keys: Seq[Array[Float]]): (Seq[Long], DataFrame) =
-    if (keys.length <= 256) {
-      import spark.implicits._
-      val pids = org.apache.spark.sql.graftbridge.ColumnBridge.evalConstants(
+  /** Content ids of probe key vectors. Small probes (the interactive
+    * GetKey/DelKey shape) evaluate the SAME keyId expression interpretively
+    * on the driver — zero Spark jobs, the Upsert idiom; big probes (CDC
+    * delete batches, up to maxDeletesPerBatch keys) keep the single hashing
+    * job, where per-expression driver eval would be the slower arm
+    * (round-17). */
+  private def probeIds(keys: Seq[Array[Float]]): Seq[Long] =
+    if (keys.length <= 256)
+      org.apache.spark.sql.graftbridge.ColumnBridge.evalConstants(
         spark, keys.map(k => keyId(typedlit(k.toSeq))))
         .map(_.asInstanceOf[Long])
-      (pids, pids.toDF("_pid"))
-    } else {
-      val probe = spark.createDataFrame(
+    else
+      spark.createDataFrame(
         spark.sparkContext.parallelize(keys.map(k => Row(k.toSeq)), 1),
         org.apache.spark.sql.types.StructType(entrySchema.slice(1, 2)))
-        .select(keyId(col("key")).as("_pid"))
-      val pids = probe.collect().map(_.getLong(0)).toSeq
-      (pids, probe)
-    }
+        .select(keyId(col("key"))).collect().map(_.getLong(0)).toSeq
 
   /** GetPred (store.rs:401-411, 869-874). */
   def getPred(name: String, cond: PredicateCondition,
@@ -844,7 +879,10 @@ class GraftEngine(val spark: SparkSession,
     val st = state(schema, name)
     keys.find(_.length != st.meta.dimension).foreach(k =>
       throw GraftErrors.dimensionMismatch(st.meta.dimension, k.length))
-    val (pids, probe) = probeIds(keys)
+    val pids = probeIds(keys)
+    // the probe frame is a LocalRelation: its broadcast collects
+    // driver-side, no job
+    val probe = { import spark.implicits._; pids.toDF("_pid") }
     val touch = touchOfIds(pids)
     // the probe ids NAME the removed rows exactly (user-bounded), so the
     // live indexes tombstone them instead of invalidating whole
@@ -1025,11 +1063,9 @@ class GraftEngine(val spark: SparkSession,
     val q = typedLit(searchInput)
     val scored = base.withColumn("_closeness",
       Similarity.closeness(algorithm, col("key"), q))
-    val simFromCloseness = algorithm match {
-      case Algorithm.CosineSimilarity | Algorithm.DotProductSimilarity |
-           Algorithm.HNSW => col("_closeness")
-      case _ => -col("_closeness") // euclidean / kdtree report distances
-    }
+    val simFromCloseness =
+      if (Similarity.reportsDistance(algorithm)) -col("_closeness")
+      else col("_closeness")
     scored.orderBy(col("_closeness").desc, col("id").asc).limit(n)
       .withColumn("similarity", simFromCloseness.cast("float"))
       .select("key", "value", "similarity")

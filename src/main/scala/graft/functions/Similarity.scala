@@ -78,6 +78,29 @@ object Similarity {
     }
   }
 
+  /** [[closeness]] of two vectors already in hand as Catalyst arrays,
+    * with the kernel's own interpreted arithmetic
+    * ([[FloatVecKernel.eval]]) — bit-equal to the column form, for
+    * rescoring rows on the driver. */
+  def closenessOf(algorithm: graft.types.Algorithm,
+      a: org.apache.spark.sql.catalyst.util.ArrayData,
+      b: org.apache.spark.sql.catalyst.util.ArrayData): Double = {
+    import graft.types.Algorithm._
+    algorithm match {
+      case CosineSimilarity | HNSW => FloatVecKernel.eval(VecOp.Cosine, a, b)
+      case DotProductSimilarity    => FloatVecKernel.eval(VecOp.Dot, a, b)
+      case EuclideanDistance       => -math.sqrt(FloatVecKernel.eval(VecOp.SqEuclidean, a, b))
+      case KDTree                  => -FloatVecKernel.eval(VecOp.SqEuclidean, a, b)
+    }
+  }
+
+  /** Whether an algorithm reports a distance (similarity = −closeness)
+    * rather than a similarity (similarity = closeness). */
+  def reportsDistance(algorithm: graft.types.Algorithm): Boolean = {
+    import graft.types.Algorithm._
+    algorithm == EuclideanDistance || algorithm == KDTree
+  }
+
   /** The user-visible similarity value for each algorithm
     * (non_linear.rs:151-175: KDTree reports squared euclidean). */
   def similarityValue(algorithm: graft.types.Algorithm, a: Column, b: Column): Column = {

@@ -33,11 +33,16 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
  *
  * Semantics worth pinning:
  *  - MUTATION ops (set/upsert/del*) are eager — their span covers the
- *    real work. READ ops (getPred/getSimN/...) return lazy frames; their
- *    span covers the engine's own planning plus any eager probes, and
- *    cluster work during later materialization is attributed to whatever
- *    span (if any) is open at that point. This is the honest boundary
- *    for a lazy engine and is documented rather than papered over.
+ *    real work. BOUNDED reads are eager too: GetKey and indexed GetSimN
+ *    (unfiltered, Bloom-filtered graph and slice scan) run all their jobs
+ *    inside their span (GetKey one, indexed GetSimN two: search and
+ *    hydration) and return a local frame whose collect runs no job.
+ *    UNBOUNDED reads (getPred, linear getSimN, the ≤4096-row exact
+ *    filtered arm) return lazy frames; their span covers the engine's own
+ *    planning plus any eager probes, and cluster work during later
+ *    materialization is attributed to whatever span (if any) is open at
+ *    that point. This is the honest boundary for a lazy result and is
+ *    documented rather than papered over.
  *  - Tracing is OFF by default: a disabled check is one volatile read,
  *    so the hot path (bench medians) is unchanged unless opted in via
  *    `Trace.enabled = true` or `SPARK_GRAFT_TRACE=1`.

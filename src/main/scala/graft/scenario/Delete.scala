@@ -17,12 +17,16 @@ import graft.ann.RoutedAnnIndex
  *  - COMPACTION tier (n/5, past the guard): local per-shard rebuilds;
  *  - RECLUSTER control: a fresh build over the survivors.
  *
- * `delete-cliff`: an engine DelPred matching more rows than
- * [[graft.engine.GraftEngine.RoutedDeleteCap]] can't name its ids for the
- * tombstone tier — the index invalidates whole and the NEXT search pays a
- * lazy recluster. Measures that first-search latency against the steady
- * state and the in-cap tombstone path. Correctness is pinned in
- * RoutedEngineSpec.
+ * `delete-cliff`: an engine DelPred matching more rows than the routed
+ * delete cap can't name its ids for the tombstone tier — the index
+ * invalidates whole and the NEXT search pays a lazy recluster. Measures
+ * that first-search latency against the steady state and the in-cap
+ * tombstone path. The scenario sets the session's cap
+ * (`spark.graft.routedDeleteCap`) to n/20, strictly between its in-cap
+ * (n/200) and past-cap (n/3) deletes, so the cliff is real at every n
+ * (the default [[graft.engine.GraftEngine.RoutedDeleteCap]] of 65536 is
+ * past n/3 below n ≈ 196k); the previous setting is restored afterwards.
+ * Correctness is pinned in RoutedEngineSpec.
  *
  * Args: [n] (default 200000).
  */
@@ -92,7 +96,7 @@ object Delete {
     val gen = SiftGen.organic()
     val e = new graft.engine.GraftEngine(spark)
     e.createStore("cliff", Dim, predicates = Set("bucket", "rare"))
-    // bucket: thirds (one bucket ≈ n/3 >> the 65536 cap at n = 200k);
+    // bucket: thirds (one bucket ≈ n/3, past the n/20 cap set below);
     // rare: ~0.5% (inside the cap — the tombstone-tier control)
     def meta(c: org.apache.spark.sql.Column) = struct(lit("raw_string").as("kind"),
       c.as("str"), lit(null).cast("binary").as("bin"))
@@ -111,13 +115,27 @@ object Delete {
       timed(label) { e.getSimN("cliff", q, K, graft.types.Algorithm.HNSW).count() }._2
     val firstBuild = search("first search (initial lazy index build)")
     val steady = search("steady-state search")
-    val (nRare, rareWall) = timed("DelPred (rare = y, in-cap)") {
-      e.delPred("cliff", Equals("rare", RawString("y")))
-    }
-    val afterTombstone = search("search after in-cap DelPred (tombstone tier)")
-    val (nBig, bigWall) = timed("DelPred (bucket = 1, past-cap)") {
-      e.delPred("cliff", Equals("bucket", RawString("1")))
-    }
+    val capKey = "spark.graft.routedDeleteCap"
+    val prevCap = spark.conf.getOption(capKey)
+    val cap = n / 20
+    spark.conf.set(capKey, cap.toString)
+    val (nRare, rareWall, afterTombstone, nBig, bigWall, invalidated) = try {
+      val (nRare, rareWall) = timed("DelPred (rare = y, in-cap)") {
+        e.delPred("cliff", Equals("rare", RawString("y")))
+      }
+      require(nRare <= cap, s"in-cap DelPred deleted $nRare rows, past the cap $cap")
+      require(e.annIndex("cliff", "hnsw_routed").isDefined, "in-cap DelPred dropped the index")
+      val afterTombstone = search("search after in-cap DelPred (tombstone tier)")
+      val (nBig, bigWall) = timed("DelPred (bucket = 1, past-cap)") {
+        e.delPred("cliff", Equals("bucket", RawString("1")))
+      }
+      require(nBig > cap, s"past-cap DelPred deleted $nBig rows, within the cap $cap")
+      (nRare, rareWall, afterTombstone, nBig, bigWall,
+        e.annIndex("cliff", "hnsw_routed").isEmpty)
+    } finally prevCap.fold(spark.conf.unset(capKey))(spark.conf.set(capKey, _))
+    require(invalidated, "past-cap DelPred kept the index")
+    println(f"routed delete cap $cap%,d: in-cap DelPred $nRare%,d rows, " +
+      f"past-cap DelPred $nBig%,d rows, index invalidated whole")
     val cliffSearch = search("FIRST search after past-cap DelPred (lazy recluster)")
     val after = search("second search (steady again)")
     println()

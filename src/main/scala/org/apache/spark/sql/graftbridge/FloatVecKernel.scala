@@ -37,31 +37,8 @@ case class FloatVecKernel(left: Expression, right: Expression, op: VecOp)
   override def dataType: DataType = DoubleType
   override def prettyName: String = op.opName
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    op match {
-      case VecOp.Dot =>
-        var acc = 0.0; var i = 0
-        while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-        acc
-      case VecOp.Cosine =>
-        var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < n) {
-          val xv = x.getFloat(i).toDouble; val yv = y.getFloat(i).toDouble
-          d += xv * yv; na += xv * xv; nb += yv * yv; i += 1
-        }
-        if (na == 0.0 || nb == 0.0) 0.0 else d / (math.sqrt(na) * math.sqrt(nb))
-      case VecOp.SqEuclidean =>
-        var acc = 0.0; var i = 0
-        while (i < n) {
-          val t = x.getFloat(i).toDouble - y.getFloat(i).toDouble
-          acc += t * t; i += 1
-        }
-        acc
-    }
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    FloatVecKernel.eval(op, a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -105,4 +82,34 @@ case class FloatVecKernel(left: Expression, right: Expression, op: VecOp)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object FloatVecKernel {
+
+  /** The kernel's interpreted arithmetic, for driver-side scoring of rows
+    * already in hand (point-read hydration) — the same double left fold
+    * as the generated code, so both paths agree bit for bit. */
+  def eval(op: VecOp, x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    op match {
+      case VecOp.Dot =>
+        var acc = 0.0; var i = 0
+        while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
+        acc
+      case VecOp.Cosine =>
+        var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+        while (i < n) {
+          val xv = x.getFloat(i).toDouble; val yv = y.getFloat(i).toDouble
+          d += xv * yv; na += xv * xv; nb += yv * yv; i += 1
+        }
+        if (na == 0.0 || nb == 0.0) 0.0 else d / (math.sqrt(na) * math.sqrt(nb))
+      case VecOp.SqEuclidean =>
+        var acc = 0.0; var i = 0
+        while (i < n) {
+          val t = x.getFloat(i).toDouble - y.getFloat(i).toDouble
+          acc += t * t; i += 1
+        }
+        acc
+    }
+  }
 }

@@ -44,7 +44,9 @@ class ScaleSpec extends AnyFunSuite {
   smoke("cdc-pq", Seq(Small), "storage=pq")
   smoke("cdc-opq", Seq(Small), "storage=opq")
   smoke("delete", Seq(Small), "| deleted | tier | delete wall |")
-  smoke("delete-cliff", Seq(Small), "| past-cap DelPred (whole invalidate) |")
+  // the past-cap DelPred really took the whole-invalidate path at 2000 rows
+  smoke("delete-cliff", Seq(Small),
+    "routed delete cap 100: in-cap DelPred 10 rows, past-cap DelPred 664 rows, index invalidated whole")
   smoke("join", Seq(Small), "| 1,000 |")
   smoke("join-filtered", Seq(Small), "| selectivity | routed p=64 (wall / recall@10) |")
   smoke("mutate", Nil, "| Upsert, single entry | 1 |", Map("SPARK_GRAFT_SF_DIR" -> SfDir))

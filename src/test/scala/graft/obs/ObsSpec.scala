@@ -55,6 +55,31 @@ class ObsSpec extends AnyFunSuite {
     assert(spansFor("obs_a").filter(_._1 == "GetPred").forall(_._4 == 0))
   }
 
+  test("bounded reads are eager: GetKey holds 1 job, indexed GetSimN 2, and collecting either runs none") {
+    import org.apache.spark.sql.graftbridge.ListenerBridge
+    val e = new graft.engine.GraftEngine(spark)
+    val rnd = new scala.util.Random(9L)
+    val keys = (0 until 64).map(_ => Array.fill(8)(rnd.nextFloat() * 2f - 1f))
+    e.createStore("obs_eager", 8)
+    e.setSeq("obs_eager", keys.map(k => (k, Map("t" -> (MetadataValue.RawString("x"): MetadataValue)))))
+    e.createNonLinearIndex("obs_eager", Seq(NonLinearConfig.HNSWConfig()))
+    e.getSimN("obs_eager", keys(1), 3, Algorithm.HNSW) // attach the index
+    val sc = spark.sparkContext
+    Trace.enabled = true
+    val (byKey, bySim) = try
+      (e.getKey("obs_eager", Seq(keys(0), keys(5))), e.getSimN("obs_eager", keys(1), 3, Algorithm.HNSW))
+    finally Trace.enabled = false
+    ListenerBridge.drain(sc)
+    val before = ListenerBridge.lastJobId(sc)
+    assert(byKey.collect().length == 2)
+    assert(bySim.collect().length == 3)
+    ListenerBridge.drain(sc)
+    assert(ListenerBridge.jobsAfter(sc, before).isEmpty, "collecting a bounded read ran a job")
+    def jobsOf(op: String): Seq[Int] = spansFor("obs_eager").filter(_._1 == op).map(_._4)
+    assert(jobsOf("GetKey") == Seq(1))
+    assert(jobsOf("GetSimN") == Seq(2))
+  }
+
   test("AI proxy spans nest: AI.Set is the parent of the engine's ops") {
     val ai = new graft.ai.AiEngine(new graft.engine.GraftEngine(spark))
     Trace.enabled = true
